@@ -109,107 +109,12 @@ def _covered_in_prior_rounds() -> set[str]:
     return set(_last_verified_round())
 
 
-def _ever_sampled() -> set[str]:
-    """Query names with ANY driver row in any round, IGNORING rewrite
-    cutoffs. Used only for pinning: _PINNED_FIRST outranks the recency
-    order solely for queries the driver has literally never run —
-    a pin that was sampled and then mechanically re-invalidated
-    competes on rewrite recency like everything else."""
-    import json
-
-    seen: set[str] = set()
-    for path in Path(__file__).resolve().parent.glob("CORRECTNESS_r*.json"):
-        try:
-            seen.update(json.loads(path.read_text()).keys())
-        except Exception:  # noqa: BLE001
-            continue
-    return seen
-
-
-# SURVEY-§2B-named and north-star-named operators: these are the queries
-# the coverage checklist names EXPLICITLY, so a driver-correctness row for
-# them is worth more than one for a cheaper registry query. Any of these
-# still uncovered are pinned to the very front of the rotation (in this
-# order); the rest of the uncovered group stays cost-ordered behind them.
-_PINNED_FIRST = (
-    # VERDICT r9 #1: the three round-9 text-op rewrites whose prior
-    # evidence _REVERIFY_FROM_ROUND correctly invalidated, then
-    # q_pagerank (its iteration loop gained lineage truncation in r9 —
-    # a driver row re-proves oracle parity post-refactor), then the
-    # pandas surface + bucketed join the verdict named explicitly
-    "q_heaps_law",
-    "q_quality_gopher",
-    "q_source_overlap",
-    "q_pagerank",
-    "q_apply_in_pandas",
-    "q_cogroup_pandas",
-    "q_join_bucketed",
-    # VERDICT r8 #1: the round-8 vector/dedup operators and the three
-    # headline streaming queries (bench-exercised every round but never
-    # driver-oracled) take the front of the rotation
-    "q_semdedup",
-    "q_embed_pq",
-    "q_embed_truncation_recall",
-    "q_hard_negatives",
-    "q_winnowing_fingerprint",
-    "q_substring_dedup_coverage",
-    "q_dup_growth_curve",
-    "q_stream_tumbling",
-    "q_stream_sliding",
-    "q_stream_dedup",
-    # round-5/6 rewrites needing oracle RE-verification (ADVICE r5):
-    # their old driver rows verified the pre-rewrite code paths
-    "q_gains_deciles",
-    "q_quantile_normalize",
-    "q_location_ladder",
-    "q_var_backtest",
-    "q_rle_compressibility",
-    "q_embed_centroids",
-    "q_tpch_q2",
-    # §2B UDF surface — never driver-sampled in rounds 1-4
-    "q_udf_scalar",
-    "q_udaf_grouped",
-    "q_udtf",
-    # north-star LLM-pipeline components without a driver row yet
-    "q_dedup_containment",
-    "q_dedup_waterfall",
-    "q_golden_record",
-    "q_dedup_threshold_sweep",
-    "q_multimodal_features",
-    "q_multimodal_resize",
-    "q_multimodal_frames",
-    "q_multimodal_audio_energy",
-    "q_text_tfidf",
-    "q_word_pmi",
-    "q_text_entropy",
-    "q_decontaminate",
-    "q_repetition_score",
-    "q_sample_mix",
-    # streaming contract proofs
-    "q_stream_idempotent_sink",
-    "q_stream_restart_recovery",
-    "q_stream_batch_invariance",
-    # round-7 replay-harness change (sentinel_batches 2 -> 1): these are
-    # the eight sentinel-dependent queries — all still uncovered, so a
-    # driver row for them verifies the NEW flush path first
-    "q_stream_state_ttl",
-    "q_stream_join_full",
-    "q_stream_join_outer",
-    "q_stream_topk",
-    "q_stream_session",
-    "q_stream_session_dynamic",
-    "q_stream_distinct_users",
-    "q_stream_window_chain",
-)
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
     ORDER IS EVIDENCE POLICY: the driver walks this dict in insertion
     order under a global time budget, so queries with no driver row in
-    any prior round go FIRST — SURVEY/north-star-named pins leading,
-    then the rest cheapest-first. Self-rotating — each round's
+    any prior round go FIRST. Self-rotating — each round's
     CORRECTNESS file pushes its newly-covered queries behind the
     still-uncovered ones. The covered tail is ordered STALEST-FIRST
     (ascending last-verified round, then cost): once every query is
@@ -225,8 +130,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     known = sorted(costs.values())
     median = known[len(known) // 2] if known else 1.0
     reverify = _reverify_rounds()
-    never_sampled = set(specs) - _ever_sampled()
-    pinned = [n for n in _PINNED_FIRST if n in specs and n in never_sampled]
     # VERDICT r9 #3: streaming evidence is the riskiest class to leave
     # outstanding (replay harness + sentinel semantics, and the most
     # expensive to spin up), so streaming-tagged uncovered queries go
@@ -238,7 +141,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # rounds ago is housekeeping the refresh cycle clears over the
     # following rounds — then cheapest-first to maximize rows under the
     # driver's 50-row budget.
-    uncovered = [n for n in specs if n not in covered and n not in set(pinned)]
+    uncovered = [n for n in specs if n not in covered]
     recency_key = lambda n: (-reverify.get(n, 0), costs.get(n, median), n)  # noqa: E731
     streams = sorted(
         (n for n in uncovered if "streaming" in specs[n].tags), key=recency_key
@@ -248,7 +151,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     )
     stale_key = lambda n: (last[n], costs.get(n, median), n)  # noqa: E731
     refreshed = sorted((n for n in specs if n in covered), key=stale_key)
-    ordered = pinned + streams + rest + refreshed
+    ordered = streams + rest + refreshed
     return {name: specs[name].fn for name in ordered}
 
 

@@ -454,9 +454,8 @@ def main() -> None:
                 for v in _host_block(host_samples)["steal_pct"].values()
                 if v is not None
             ]
-            out["stream_guard"] = _stream_guard_verdict(
-                broken, max(steals) if steals else None
-            )
+            steal_max = max(steals) if steals else None
+            out["stream_guard"] = _stream_guard_verdict(broken, steal_max)
             for k, (got, floor) in broken.items():
                 msg = (
                     f"metric missing (streaming bench failed?), floor {floor}"

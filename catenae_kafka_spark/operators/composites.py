@@ -12,43 +12,27 @@ actually run, end to end.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from catenae_kafka_spark.catalog import catalog, table_path
+from catenae_kafka_spark.catalog import catalog
+from catenae_kafka_spark.operators.checkpointing import past_gate
 from catenae_kafka_spark.registry import REGISTRY
 
 #: q_top_unshipped's broadcast semi-join pre-filter is gated on the
-#: orders table's on-disk footprint (VERDICT r12 #4): ``F.broadcast``
-#: is a hint Spark MUST obey, and at 100 TB the qualifying-orderkey set
-#: is billions of keys — past the 8 GB / 512M-row broadcast hard cap
-#: and a driver OOM. Below the gate the hint stays (the r12-measured
-#: win; covers sf0.1 at 2.7 MB and the 100× rung at 283 MB with 3-4×
-#: headroom); above it the pre-filter is dropped entirely and the
-#: optimizer's runtime Bloom filter (spark.sql.optimizer.runtime.
+#: orders table's estimated size (VERDICT r12 #4): ``F.broadcast`` is a
+#: hint Spark MUST obey, and at 100 TB the qualifying-orderkey set is
+#: billions of keys — past the 8 GB / 512M-row broadcast hard cap and a
+#: driver OOM. Below the gate the hint stays (the r12-measured win;
+#: covers sf0.1 at 2.7 MB and the 100× rung at 283 MB with 3-4×
+#: headroom); past it, or when the size is unknown
+#: (``checkpointing.past_gate``), the pre-filter is dropped entirely and
+#: the optimizer's runtime Bloom filter (spark.sql.optimizer.runtime.
 #: bloomFilter.*, on by default) provides the same big-side pruning
 #: with a size-bounded filter. 1 GiB of orders parquet ≈ 50M orders ≈
 #: ~5M qualifying keys ≈ ~150 MB hash relation — comfortably inside
 #: the cap; the next decade of growth is not.
-_SEMI_BROADCAST_GATE_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SEMI_BROADCAST_GATE", 1 << 30)
-)
-
-
-def _dir_bytes(path: str) -> int:
-    """Parquet table footprint in bytes — a single file (the testdata
-    fixtures) or a flat directory of part files (the scale stagings);
-    -1 when the path is not locally statable (size unknown — callers
-    must fail toward the scale-safe branch)."""
-    try:
-        if os.path.isfile(path):
-            return os.stat(path).st_size
-        with os.scandir(path) as it:
-            return sum(e.stat().st_size for e in it if e.is_file())
-    except OSError:
-        return -1
+_SEMI_BROADCAST_GATE_BYTES = 1 << 30
 
 
 @REGISTRY.register(
@@ -84,7 +68,7 @@ def q_top_unshipped(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer⋈orders side is cheap (dim broadcast over the filtered
     orders scan), so computing it twice beats shuffling 42 M dead rows.
     The pre-filter (and its mandatory ``F.broadcast`` hint) is
-    SIZE-GATED on the orders table's footprint (optimization r13,
+    SIZE-GATED on the orders table's estimated size (optimization r13,
     VERDICT r12 #4 — see ``_SEMI_BROADCAST_GATE_BYTES``): past the gate
     the qualifying key set would outgrow the 8 GB broadcast cap, so the
     pre-filter is dropped and the same big-side pruning comes from the
@@ -99,8 +83,7 @@ def q_top_unshipped(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey") == F.col("o_custkey"),
     )
     lineitem = c.lineitem.filter(F.col("l_shipdate") > "1997-01-01")
-    orders_bytes = _dir_bytes(table_path(sf_dir, "orders"))
-    if 0 <= orders_bytes <= _SEMI_BROADCAST_GATE_BYTES:
+    if not past_gate(c.orders, _SEMI_BROADCAST_GATE_BYTES):
         lineitem = lineitem.join(
             F.broadcast(cust_orders.select("o_orderkey")),
             F.col("l_orderkey") == F.col("o_orderkey"),

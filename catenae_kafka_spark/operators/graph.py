@@ -20,27 +20,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from catenae_kafka_spark.catalog import catalog
+from catenae_kafka_spark.operators.checkpointing import make_checkpointer, materialize
 from catenae_kafka_spark.registry import REGISTRY
 
 DAMPING = 0.85
 ITERATIONS = 3
-
-
-def _materialize(df: DataFrame) -> DataFrame:
-    """Eagerly checkpoint a BOUNDED reused table (optimization r13,
-    guide §5): Catalyst does not common-subexpression-eliminate
-    repeated DataFrame subtrees, so a pair/edge table referenced by
-    several downstream branches re-plans and re-executes its whole
-    build pipeline per reference (measured up to 100 duplicated
-    lineitem scans / 374 Exchanges in one query's physical plan).
-    Callers pass brand-pair / nation-pair / customer×brand tables —
-    bounded or fact-fraction-sized, the standard "materialize the
-    similarity/edge table once" step of a graph job. localCheckpoint
-    (executor blocks) matches the connected_components r9 policy for
-    local/driver runs; every run still computes from parquet."""
-    from catenae_kafka_spark.operators.checkpointing import make_checkpointer
-
-    return make_checkpointer(df.sparkSession, None)(df)
 
 
 def pagerank(
@@ -68,8 +52,6 @@ def pagerank(
     survives executor loss on a real cluster. The registered 3-round
     q_pagerank never hits the threshold, so its plan (and its parity
     with the unrolled-SQL oracle) is unchanged."""
-    from catenae_kafka_spark.operators.checkpointing import make_checkpointer
-
     ckpt = make_checkpointer(edges.sparkSession, checkpoint_dir)
     out_w = edges.groupBy(src).agg(F.sum(weight).alias("out_w"))
     norm = edges.join(out_w, src).select(
@@ -242,7 +224,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     baskets = brand_baskets(c)
     a = baskets.select("l_orderkey", F.col("p_brand").alias("u"))
     b = baskets.select("l_orderkey", F.col("p_brand").alias("v"))
-    edges = _materialize(
+    edges = materialize(
         a.join(b, "l_orderkey")
         .filter(F.col("u") < F.col("v"))
         .groupBy("u", "v")
@@ -331,9 +313,7 @@ def q_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pipeline isn't re-planned/re-executed per reference (optimization
     # r13, guide §5; Catalyst does not CSE repeated DataFrame subtrees:
     # measured 20 lineitem scans / 79 Exchanges in this query's plan).
-    from catenae_kafka_spark.operators.checkpointing import make_checkpointer
-
-    weighted = make_checkpointer(spark, None)(
+    weighted = materialize(
         a.join(b, "l_orderkey")
         .filter(F.col("u") < F.col("v"))
         .groupBy("u", "v")
@@ -424,7 +404,7 @@ def q_graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n") >= 80)
         .select("u", "v")
     )
-    sym = _materialize(
+    sym = materialize(
         edges.unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
     )
     deg = sym.groupBy(F.col("u").alias("node")).agg(F.count("*").alias("d"))
@@ -509,9 +489,7 @@ def q_shortest_path_bf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # brand-pair bounded; referenced by sym (both union sides) and the
     # seed — materialize once (optimization r13, guide §5: measured 60
     # lineitem scans / 236 Exchanges in this query's plan without it)
-    from catenae_kafka_spark.operators.checkpointing import make_checkpointer
-
-    weighted = make_checkpointer(spark, None)(
+    weighted = materialize(
         a.join(b, "l_orderkey")
         .filter(F.col("u") < F.col("v"))
         .groupBy("u", "v")
@@ -619,7 +597,7 @@ def q_collab_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n") >= 80)
         .select("u", "v")
     )
-    sym = _materialize(
+    sym = materialize(
         edges.unionAll(
             edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
@@ -648,7 +626,7 @@ def q_collab_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("sim_micro"),
         )
     )
-    owned = _materialize(
+    owned = materialize(
         c.orders.select("o_custkey", "o_orderkey")
         .join(baskets, F.col("o_orderkey") == F.col("l_orderkey"))
         .select("o_custkey", "p_brand")
@@ -758,7 +736,7 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= 60)
         .select("u", "v")
     )
-    sym = _materialize(
+    sym = materialize(
         edges.unionAll(
             edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
@@ -880,10 +858,7 @@ def q_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # near-exponentially — measured 100 lineitem scans / 374 Exchanges
     # / 0 ReusedExchange in this query's physical plan (identical rows
     # after; rung numbers in OPTIMIZATION_r13.md).
-    from catenae_kafka_spark.operators.checkpointing import make_checkpointer
-
-    ckpt = make_checkpointer(spark, None)
-    sym = ckpt(
+    sym = materialize(
         edges.unionAll(
             edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
@@ -985,9 +960,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plus the label init — materialize once (optimization r13, guide
     # §5: measured 6 lineitem scans / 32 Exchanges in this query's
     # plan without it; the edge build is a fact⋈fact join)
-    from catenae_kafka_spark.operators.checkpointing import make_checkpointer
-
-    edges = make_checkpointer(spark, None)(
+    edges = materialize(
         directed.select(F.col("src").alias("u"), F.col("dst").alias("v"), "w")
         .unionAll(
             directed.select(
@@ -1121,7 +1094,7 @@ def q_rec_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n") >= 50)
         .select("u", "v")
     )
-    sym = _materialize(
+    sym = materialize(
         edges.unionAll(
             edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
@@ -1156,7 +1129,7 @@ def q_rec_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("sim_micro"),
         )
     )
-    owned = _materialize(
+    owned = materialize(
         train_o.join(baskets, train_o["o_orderkey"] == baskets["l_orderkey"])
         .select("o_custkey", "p_brand")
         .distinct()
@@ -1282,7 +1255,7 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count("*").cast("bigint").alias("w"))
     )
-    sym = _materialize(
+    sym = materialize(
         directed.select(F.col("src").alias("u"), F.col("dst").alias("v"), "w")
         .unionAll(
             directed.select(F.col("dst").alias("u"), F.col("src").alias("v"), "w")
@@ -1415,7 +1388,7 @@ def q_rec_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n") >= 80)
         .select("u", "v")
     )
-    sym = _materialize(
+    sym = materialize(
         edges.unionAll(
             edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
@@ -1444,7 +1417,7 @@ def q_rec_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("sim_micro"),
         )
     )
-    owned = _materialize(
+    owned = materialize(
         c.orders.select("o_custkey", "o_orderkey")
         .join(baskets, F.col("o_orderkey") == F.col("l_orderkey"))
         .select("o_custkey", "p_brand")
@@ -1647,9 +1620,7 @@ def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # union/min-fold re-references dist — materialize the base once
     # (optimization r13, guide §5: measured 60 lineitem scans / 240
     # Exchanges in this query's plan without it)
-    from catenae_kafka_spark.operators.checkpointing import make_checkpointer
-
-    weighted = make_checkpointer(spark, None)(
+    weighted = materialize(
         a.join(b, "l_orderkey")
         .filter(F.col("u") < F.col("v"))
         .groupBy("u", "v")
@@ -1752,7 +1723,7 @@ def q_resource_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n") >= 80)
         .select("u", "v")
     )
-    sym = _materialize(
+    sym = materialize(
         edges.unionAll(
             edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )

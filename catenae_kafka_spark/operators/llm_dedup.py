@@ -31,14 +31,13 @@ real matches on it.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from catenae_kafka_spark.catalog import catalog
 from catenae_kafka_spark.functions.hof import bind
 from catenae_kafka_spark.functions.ident import quote_ident as _quote_ident
+from catenae_kafka_spark.operators.checkpointing import make_checkpointer, past_gate
 from catenae_kafka_spark.registry import REGISTRY
 
 HEX_HIGH = ("8", "9", "a", "b", "c", "d", "e", "f")
@@ -203,7 +202,7 @@ def minhash_signatures(
 #: way. 1024 ids ≈ 8 KB buffer per bucket, and a 1024-doc bucket
 #: already yields ~524k pairs — any bigger bucket is better off as
 #: join rows.
-_LSH_BUCKET_CAP = int(os.environ.get("SPARK_GRAFT_LSH_BUCKET_CAP", 1024))
+_LSH_BUCKET_CAP = 1024
 
 #: The guard itself costs ~40% on the candidate stage (measured
 #: interleaved at sf0.1: 0.86 → 1.39 s, and the 100× rung: 2.2 → 3.2 s
@@ -214,30 +213,9 @@ _LSH_BUCKET_CAP = int(os.environ.get("SPARK_GRAFT_LSH_BUCKET_CAP", 1024))
 #: buffer is every doc id in one bucket, 8-16 B × n_docs ≲ input_bytes
 #: / 4 ≤ ~256 MB at the gate — while past the gate (where a mega-bucket
 #: buffer could reach executor-heap scale) the guarded plan bounds
-#: every buffer at ``_LSH_BUCKET_CAP`` ids. The estimate is Catalyst's
-#: optimizedPlan sizeInBytes (driver-side metadata, no job); an
-#: unavailable estimate fails TOWARD the guard.
-_LSH_GUARD_GATE_BYTES = int(
-    os.environ.get("SPARK_GRAFT_LSH_GUARD_GATE", 1 << 30)
-)
-
-
-def _estimated_bytes(df: DataFrame) -> int:
-    """Estimated INPUT bytes of a plan: the sum of its leaf relations'
-    size estimates (parquet leaves report file bytes, local relations
-    their data size). Leaf stats are the reliable part of Catalyst's
-    size estimation — interior Join nodes multiply their children's
-    sizes without CBO, which inflates a 4-row test fixture's joined
-    plan to ~1e19 "bytes". Returns -1 when the estimate cannot be
-    obtained (callers must fail toward the scale-safe branch)."""
-    try:
-        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-        return sum(
-            int(leaves.apply(i).stats().sizeInBytes())
-            for i in range(leaves.size())
-        )
-    except Exception:  # noqa: BLE001 — py4j/analysis failure
-        return -1
+#: every buffer at ``_LSH_BUCKET_CAP`` ids. The gate is
+#: ``checkpointing.past_gate``: an unknown size fails TOWARD the guard.
+_LSH_GUARD_GATE_BYTES = 1 << 30
 
 
 def minhash_candidate_pairs(
@@ -285,11 +263,9 @@ def minhash_candidate_pairs(
     single-aggregation plan runs — see the gate constant's docstring
     for why that is memory-safe there and why the guard is not free."""
     guarded = bucket_cap is not None
-    if bucket_cap is None:
-        est = _estimated_bytes(signed)
-        if est < 0 or est >= _LSH_GUARD_GATE_BYTES:
-            guarded = True
-            bucket_cap = _LSH_BUCKET_CAP
+    if bucket_cap is None and past_gate(signed, _LSH_GUARD_GATE_BYTES):
+        guarded = True
+        bucket_cap = _LSH_BUCKET_CAP
     bt = _quote_ident(id_col)  # ADVICE r10 — see _quote_ident
     # Built as one parsed SQL expression, not bands×rows composed Column
     # objects — same py4j plan-build discipline (and parity test) as
@@ -866,8 +842,6 @@ def connected_components(
     if the loop exits without converging — a silent cap would return
     labels that diverge from the recursive-CTE oracle with no error.
     """
-    from catenae_kafka_spark.operators.checkpointing import make_checkpointer
-
     ckpt = make_checkpointer(edges.sparkSession, checkpoint_dir)
     und = edges.union(
         edges.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from catenae_kafka_spark.catalog import catalog
+from catenae_kafka_spark.operators.checkpointing import materialize
 from catenae_kafka_spark.registry import REGISTRY
 
 
@@ -3254,9 +3255,7 @@ def q_absorption_3step(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-planned/re-executed per reference (optimization r13, guide §5:
     # measured 83 Exchanges / 0 ReusedExchange in this query's plan
     # without it; Catalyst does not CSE repeated DataFrame subtrees)
-    from catenae_kafka_spark.operators.checkpointing import make_checkpointer
-
-    tr = make_checkpointer(spark, None)(
+    tr = materialize(
         seq.groupBy("cur", "nxt").agg(F.count("*").cast("bigint").alias("c"))
     )
     r = tr.groupBy("cur").agg(F.sum("c").cast("bigint").alias("rt"))

@@ -520,3 +520,55 @@ def test_compact_record_carries_stream_guard_breach():
     assert len(json.dumps(c)) <= m.MAX_FINAL_LINE_BYTES
     # absent breach adds no key
     assert "stream_guard" not in m._compact_record(_full_record(m))
+
+
+def test_main_emits_record_through_unreachable_stream_floor(
+    tmp_path, capsys, monkeypatch
+):
+    """ADVICE r13: the breach print interpolated an unassigned
+    ``steal_max``, so a breach that survived its retries raised
+    NameError before ``_emit`` and the round lost its whole bench
+    record. Drive main() through a breach with floors nobody can reach
+    (stubbed session and query work, quiet-host steal samples): the
+    record must still be emitted, carrying the breach, before the
+    quiet-host exit(1)."""
+    from types import SimpleNamespace
+    from unittest import mock
+
+    import pytest
+
+    import catenae_kafka_spark.streaming.sources as sources
+
+    m = _bench()
+    spark = mock.MagicMock()
+    spark.read.parquet.side_effect = OSError("no events fixture")
+    spec = SimpleNamespace(bench=True, fn=lambda s, sf: mock.MagicMock())
+    ticks = iter(range(0, 10**9, 1000))
+
+    def quiet_sample(label):
+        return {"label": label, "load1": 0.1, "_steal": 0, "_total": next(ticks)}
+
+    monkeypatch.setattr(m, "get_spark", lambda name: spark)
+    monkeypatch.setattr(m, "all_specs", lambda: {"q_stream_tumbling": spec})
+    monkeypatch.setattr(m, "_sustained_stream_rate", lambda s, sf: 1)
+    monkeypatch.setattr(m, "_host_sample", quiet_sample)
+    monkeypatch.setattr(m, "N_GUARD_RETRIES", 1)
+    monkeypatch.setattr(sources, "replay_events", lambda s, sf: None)
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", str(tmp_path / "sf0.1"))
+    monkeypatch.setenv("BENCH_MIN_STREAM_EPS", str(10**12))
+    monkeypatch.setenv("BENCH_MIN_SUSTAINED_EPS", str(10**12))
+    monkeypatch.setenv("BENCH_SKIP_10X", "1")
+    monkeypatch.setenv("BENCH_FULL_PATH", str(tmp_path / "full.json"))
+    with pytest.raises(SystemExit) as exit_info:
+        m.main()
+    assert exit_info.value.code == 1  # quiet-host breach stays fatal
+    cap = capsys.readouterr()
+    line = [ln for ln in cap.out.splitlines() if ln.strip()][-1]
+    c = json.loads(line)
+    assert c["stream_guard"] == {
+        "breached": ["stream_events_per_s", "stream_events_per_s_sustained"],
+        "contention_suspect": False,
+    }
+    full = json.loads((tmp_path / "full.json").read_text())
+    assert full["stream_guard"]["steal_pct_max"] == 0.0
+    assert "steal_max=0.0%, continuing to scale rungs" in cap.err

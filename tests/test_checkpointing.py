@@ -1,7 +1,8 @@
 """make_checkpointer's session-global checkpoint-root policy
 (VERDICT r9): the SparkContext has ONE checkpoint root; the helper sets
 it only when unset, accepts a matching root, and raises on a conflicting
-one instead of silently redirecting the first caller's checkpoints."""
+one instead of silently redirecting the first caller's checkpoints.
+Plus ``materialize``, the bounded-intermediate policy it shares."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import pytest
 from catenae_kafka_spark.operators.checkpointing import (
     _same_root,
     make_checkpointer,
+    materialize,
 )
 
 
@@ -78,3 +80,17 @@ def test_two_checkpoint_roots_in_one_session_conflict(spark, ckpt_root, tmp_path
     assert _same_root(spark.sparkContext.getCheckpointDir(), ckpt_root)
     # and the None policy (localCheckpoint) is unaffected by all of it
     assert make_checkpointer(spark, None)(df).count() == 10
+
+
+def test_materialize_computes_once_from_its_own_session(spark):
+    """``materialize`` takes its session from the DataFrame and returns
+    the same rows with the build pipeline cut off: later references
+    scan the checkpointed blocks, not the source plan."""
+    df = spark.range(10).selectExpr("id AS v", "id * id AS sq")
+    out = materialize(df.filter("v % 2 = 0"))
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "Range" not in plan and "LogicalRDD" in plan
+    assert sorted(map(tuple, out.collect())) == [
+        (v, v * v) for v in range(0, 10, 2)
+    ]
+    assert make_checkpointer(spark, None) is materialize

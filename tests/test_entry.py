@@ -189,23 +189,18 @@ def test_mechanical_reverify_supersedes_manual_floor():
 
 def test_rotation_orders_uncovered_streams_before_batch():
     """VERDICT r9 #3 + r12 recency policy: within the uncovered (front)
-    segment, never-driver-sampled pins come first, then every
-    streaming-tagged query, then the batch remainder; within the stream
-    and batch groups the most recently REWRITTEN queries lead (this
-    round's code changes carry the real regression risk), ties
-    cheapest-first. If nothing relevant is uncovered anymore, the
-    invariant holds vacuously."""
+    segment, every streaming-tagged query comes before the batch
+    remainder; within the stream and batch groups the most recently
+    REWRITTEN queries lead (this round's code changes carry the real
+    regression risk), ties cheapest-first. If nothing relevant is
+    uncovered anymore, the invariant holds vacuously."""
     from catenae_kafka_spark.registry import all_specs
 
     mod = _load_entry()
     order = list(mod.queries())
     covered = mod._covered_in_prior_rounds()
     specs = all_specs()
-    uncovered = [n for n in order if n not in covered]
-    never = set(specs) - mod._ever_sampled()
-    pinned = [n for n in mod._PINNED_FIRST if n in specs and n in never]
-    assert uncovered[: len(pinned)] == pinned
-    tail = uncovered[len(pinned):]
+    tail = [n for n in order if n not in covered]
     is_stream = ["streaming" in specs[n].tags for n in tail]
     # all True (streams) must precede all False (batch)
     assert is_stream == sorted(is_stream, reverse=True), (

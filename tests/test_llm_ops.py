@@ -669,7 +669,11 @@ def test_lsh_skew_guard_pair_set_identical(spark, monkeypatch):
     output."""
     from pyspark.sql import functions as F
 
+    from catenae_kafka_spark.operators import checkpointing
     from catenae_kafka_spark.operators import llm_dedup as ld
+
+    def _optimized(df):
+        return df._jdf.queryExecution().optimizedPlan().toString().lower()
 
     docs = spark.range(300).select(
         F.col("id").alias("doc_id"),
@@ -689,13 +693,20 @@ def test_lsh_skew_guard_pair_set_identical(spark, monkeypatch):
         wide = ld.minhash_candidate_pairs(signed, bucket_cap=10_000)
         assert wide.exceptAll(auto).count() == 0
         assert auto.exceptAll(wide).count() == 0
-        # gate forced to 0: the AUTO path must pick the guarded plan
-        # (bucket-size window visible in the plan) and stay identical
-        monkeypatch.setattr(ld, "_LSH_GUARD_GATE_BYTES", 0)
-        gated = ld.minhash_candidate_pairs(signed)
-        assert "window" in gated._jdf.queryExecution().optimizedPlan().toString().lower()
-        assert gated.exceptAll(auto).count() == 0
-        assert auto.exceptAll(gated).count() == 0
+        assert "window" not in _optimized(auto)
+        # gate forced to 0, and at the real gate an unknown input size:
+        # the AUTO path must pick the guarded plan (bucket-size window
+        # visible in the plan) and stay identical
+        with monkeypatch.context() as mp:
+            mp.setattr(ld, "_LSH_GUARD_GATE_BYTES", 0)
+            gated = ld.minhash_candidate_pairs(signed)
+        with monkeypatch.context() as mp:
+            mp.setattr(checkpointing, "_estimated_bytes", lambda df: -1)
+            unknown = ld.minhash_candidate_pairs(signed)
+        for guarded in (gated, unknown):
+            assert "window" in _optimized(guarded)
+            assert guarded.exceptAll(auto).count() == 0
+            assert auto.exceptAll(guarded).count() == 0
     finally:
         signed.unpersist()
 

@@ -4,7 +4,10 @@ partitioning-invariance, pandas reference parity, sketch exactness)."""
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -2741,21 +2744,58 @@ def test_median_histogram_collect_refuses_over_cap(spark):
         _bounded_collect(spark.range(101), 100, "probe")
 
 
-def test_top_unshipped_broadcast_gate(spark, monkeypatch):
+SF_GATE = os.path.join(os.path.dirname(SF), "sf0.01")
+
+
+def _orders_layout(spark, tmp_path, monkeypatch, layout: str) -> str:
+    """An sf0.01 copy whose orders table is laid out as ``layout``:
+    the flat single file, a ``partitionBy("yr")`` directory (only a
+    few top-level bytes; the data lives in the partition subdirectories)
+    or any layout whose size estimate is unknown."""
+    from catenae_kafka_spark.operators import checkpointing
+
+    src = SF_GATE
+    if layout == "flat":
+        return src
+    if layout == "unknown":
+        monkeypatch.setattr(checkpointing, "_estimated_bytes", lambda df: -1)
+        return src
+    sf = tmp_path / "sf_nested"
+    sf.mkdir()
+    for name in ("customer", "lineitem"):
+        os.symlink(f"{src}/{name}.parquet", sf / f"{name}.parquet")
+    spark.read.parquet(f"{src}/orders.parquet").withColumn(
+        "yr", F.year("o_orderdate")
+    ).write.partitionBy("yr").parquet(str(sf / "orders.parquet"))
+    return str(sf)
+
+
+@pytest.mark.parametrize("layout", ["flat", "nested", "unknown"])
+def test_top_unshipped_broadcast_gate(spark, monkeypatch, tmp_path, layout):
     """VERDICT r12 #4: q_top_unshipped's forced-broadcast semi-join
-    pre-filter is size-gated on the orders footprint — below the gate
-    the plan keeps the broadcast LeftSemi (the r12-measured win); above
-    it the hint AND the pre-filter are dropped (the runtime Bloom
-    filter provides the pruning at that scale) with identical output."""
+    pre-filter is size-gated on the orders table's estimated size —
+    below the gate the plan keeps the broadcast LeftSemi (the
+    r12-measured win); past it, or when the size is unknown, the hint
+    AND the pre-filter are dropped (the runtime Bloom filter provides
+    the pruning at that scale) with identical output. A partitioned
+    orders directory must size by its data, not its top-level files."""
     from catenae_kafka_spark.operators import composites as co
 
-    sf = "/root/testdata/sf0.01"
-    on = co.q_top_unshipped(spark, sf)
-    plan_on = on._jdf.queryExecution().executedPlan().toString()
-    assert "LeftSemi" in plan_on  # gate passes at test scale
-    r_on = sorted(map(tuple, on.collect()))
-    monkeypatch.setattr(co, "_SEMI_BROADCAST_GATE_BYTES", 0)
-    off = co.q_top_unshipped(spark, sf)
-    plan_off = off._jdf.queryExecution().executedPlan().toString()
-    assert "LeftSemi" not in plan_off  # no forced hint above the gate
-    assert sorted(map(tuple, off.collect())) == r_on
+    def plan_and_rows(sf):
+        df = co.q_top_unshipped(spark, sf)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan, sorted(map(tuple, df.collect()))
+
+    _, ref = plan_and_rows(SF_GATE)
+    sf = _orders_layout(spark, tmp_path, monkeypatch, layout)
+    plan, rows = plan_and_rows(sf)
+    # at the real gate the test-scale table keeps the hint unless its
+    # size is unknown, which fails toward the scale-safe plan
+    assert ("LeftSemi" in plan) == (layout != "unknown")
+    assert rows == ref
+    # past the gate (1 KiB: above a partitioned directory's top-level
+    # bytes, below its data) every layout drops the hint
+    monkeypatch.setattr(co, "_SEMI_BROADCAST_GATE_BYTES", 1024)
+    plan, rows = plan_and_rows(sf)
+    assert "LeftSemi" not in plan
+    assert rows == ref
