@@ -139,7 +139,6 @@ def _compact_record(out: dict) -> dict:
                 "worst_ratio": r.get("worst_ratio"),
                 "guard_failed": r.get("guard_failed"),
                 "value": r.get("value"),
-                "excluded": r.get("excluded"),
             }
     for k in ("sfx1_error", "sfx10_error"):
         if k in out:
@@ -212,11 +211,19 @@ N_RUNS_BATCH = 5  # batch queries (cheap; more samples for a stable min)
 #: streaming-floor re-measures before declaring a breach (VERDICT r12
 #: #1: two retries were not enough to ride out a multi-minute
 #: contention burst; each retry costs ~2-6 s)
-N_GUARD_RETRIES = int(os.environ.get("BENCH_GUARD_RETRIES", 4))
+N_GUARD_RETRIES = 4
 #: steal%% at or above which a floor breach is attributed to host
 #: contention rather than code. Quiet-host rounds record <=0.1-0.5%%;
 #: every documented false breach (r12, r13 baseline) ran at >=2%%.
-STEAL_SUSPECT_PCT = float(os.environ.get("BENCH_STEAL_SUSPECT_PCT", 1.0))
+STEAL_SUSPECT_PCT = 1.0
+#: streaming-throughput floors (events/s), calibrated at sf0.1 (VERDICT
+#: r5 #7): well below the measured record (e2e 95.8k, sustained 315k)
+#: but well above any pre-fix number, so a regression to the old
+#: fixed-cost behavior fails the bench run loudly instead of drifting
+STREAM_FLOORS = {
+    "stream_events_per_s": 60_000,
+    "stream_events_per_s_sustained": 250_000,
+}
 # Primary stat is the per-query MIN (timeit's convention): round-7
 # measured the driver host stealing up to 23% CPU with 70% sys-time
 # spikes (vCPU descheduling + guest spinlock contention) — the same
@@ -356,28 +363,17 @@ def main() -> None:
         print(f"sustained-stream bench failed: {exc}", file=sys.stderr, flush=True)
     host_samples.append(_host_sample("sustained_done"))
 
-    # Regression guard (VERDICT r5 #7): the round-5 streaming gains came
-    # from replay batching + state-partition floors; hold that line. The
-    # floors sit well below the measured record (e2e 95.8k, sustained
-    # 315k at sf0.1) but well above any pre-fix number, so a regression
-    # to the old fixed-cost behavior fails the bench run loudly instead
-    # of drifting. Calibrated at the driver's sf0.1 — other SFs skip.
+    # Regression guard on STREAM_FLOORS: the round-5 streaming gains
+    # came from replay batching + state-partition floors; hold that
+    # line. Calibrated at the driver's sf0.1 — other SFs skip.
     if abs(sf_from_dir(sf_dir) - 0.1) < 1e-9:
-        floors = {
-            "stream_events_per_s": int(
-                os.environ.get("BENCH_MIN_STREAM_EPS", 60_000)
-            ),
-            "stream_events_per_s_sustained": int(
-                os.environ.get("BENCH_MIN_SUSTAINED_EPS", 250_000)
-            ),
-        }
         # A MISSING metric is a guard failure too (ADVICE r6): the
         # streaming bench swallows its exception above, and a collapse
         # to crash must fail as loudly as a collapse in throughput.
         def _breached() -> dict:
             return {
                 k: (out.get(k), floor)
-                for k, floor in floors.items()
+                for k, floor in STREAM_FLOORS.items()
                 if out.get(k) is None or out[k] < floor
             }
 
@@ -481,7 +477,6 @@ def main() -> None:
                     key="sfx1",
                     dst=os.environ.get("SFX1_DIR", "/tmp/sfx1"),
                     k=10,
-                    slack=SCALE10X_SLACK,
                     n_runs=N_RUNS_10X,
                 )
             except Exception as exc:  # noqa: BLE001
@@ -493,10 +488,7 @@ def main() -> None:
         # 100x rung (VERDICT r9 #6): one more 10x step, ratioed against
         # the sfx1 rung's timings (its true 10x-input base). Skipped
         # when the sfx1 rung failed or was skipped — without the 10x
-        # base its step would be a 100x jump mislabeled as 10x (the
-        # scale_ladder discipline). Since the near-dup jitter
-        # (VERDICT r10 #4, tools/scale10x.py) q_dedup_minhash is timed
-        # here like every other headline query — X100_EXCLUDE is empty.
+        # base its step would be a 100x jump mislabeled as 10x.
         sfx1_ok = bool(out.get("sfx1")) and not out["sfx1"].get("guard_failed")
         if not os.environ.get("BENCH_SKIP_100X") and sfx1_ok:
             try:
@@ -507,7 +499,6 @@ def main() -> None:
                     key="sfx10",
                     dst=os.environ.get("SFX10_DIR", "/tmp/sfx10"),
                     k=100,
-                    slack=SCALE100X_SLACK,
                     n_runs=N_RUNS_100X,
                     stage_if_missing=False,
                 )
@@ -533,15 +524,11 @@ def main() -> None:
         sys.exit(1)
 
 
-#: each 10x-input step may cost at most 15x wall (the scale_ladder
-#: LINEAR_SLACK x 10 gate); q_dedup_minhash's documented worst case on
-#: the clone-replicated corpus (pair OUTPUT grows ~45x) measured 2.7-6x.
-SCALE10X_SLACK = float(os.environ.get("BENCH_10X_SLACK", 15.0))
+#: the no-super-linear gate: each 10x-input step (sf0.1 -> sfx1 and
+#: sfx1 -> sfx10) may cost at most 15x wall; measured worst steps sit
+#: under 4x at both rungs (BASELINE.md)
+SCALE_STEP_SLACK = 15.0
 N_RUNS_10X = 2
-#: the sfx10 rung is a 10x step too (base = sfx1), so the same
-#: per-step slack applies; measured worst top-step growth there is
-#: 3.9x (BASELINE.md SCALING table)
-SCALE100X_SLACK = float(os.environ.get("BENCH_100X_SLACK", 15.0))
 #: min-of-2: a single cold shot at a new scale overestimates 2-4x
 #: (page cache + codegen reuse); the second run is warm
 N_RUNS_100X = 2
@@ -555,7 +542,6 @@ def _scale_rung(
     key: str,
     dst: str,
     k: int,
-    slack: float,
     n_runs: int,
     stage_if_missing: bool = True,
 ) -> None:
@@ -592,7 +578,7 @@ def _scale_rung(
                     "_STAGED_OK marker — note the marker format gained "
                     "src in r10 and jitter mode in r11, so older "
                     f"stagings are stale BY DESIGN); run `python "
-                    f"tools/scale10x.py {dst} --k {k} --stage-only` to "
+                    f"tools/scale10x.py {dst} --k {k}` to "
                     "(re)stage this rung"
                 ),
                 "k_vs_sf01": k,
@@ -612,9 +598,6 @@ def _scale_rung(
         for n, s in all_specs().items()
         if s.bench and not n.startswith("q_stream")
     }
-    excluded = sorted(n for n in specs if k >= 100 and n in s10.X100_EXCLUDE)
-    for n in excluded:
-        del specs[n]
 
     def measure(name) -> float:
         runs = []
@@ -646,9 +629,8 @@ def _scale_rung(
     # one re-measure for breached/errored queries before declaring a
     # regression: a contention burst (or a transient env hiccup) shows
     # up here first
-    retry = set(_ratio_guard(t_rung, base_timings, slack)["breached"]) | set(
-        errors
-    )
+    g = _ratio_guard(t_rung, base_timings, SCALE_STEP_SLACK)
+    retry = set(g["breached"]) | set(errors)
     for n in retry:
         try:
             t = measure(n)
@@ -656,7 +638,7 @@ def _scale_rung(
             errors.pop(n, None)
         except Exception as exc:  # noqa: BLE001
             errors[n] = f"{type(exc).__name__}: {exc}"[:300]
-    g = _ratio_guard(t_rung, base_timings, slack)
+    g = _ratio_guard(t_rung, base_timings, SCALE_STEP_SLACK)
     out[key] = {
         # input_ratio is the step vs THIS rung's base (sfx10's base is
         # sfx1); k and dst pin the absolute scale so the block stays
@@ -668,9 +650,8 @@ def _scale_rung(
         "value": round(sum(t_rung.values()), 3),
         "ratio_vs_base_min": g["ratios"],
         "worst_ratio": g["worst"],
-        "slack": slack,
+        "slack": SCALE_STEP_SLACK,
         "stage_sec": t_stage,
-        "excluded": excluded or None,
         # guard_breached holds FLOAT ratios only (consumers compare it
         # against slack numerically); crashed queries live in errors —
         # both fail the run via guard_failed

@@ -43,35 +43,22 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# Per-process cache of INFERRED parquet schemas (optimization r12,
-# guide §5: the driver should do almost no data work). A bare
+# Per-process memo of reader DataFrames (optimization r12, guide §5:
+# the driver should do almost no data work). A bare
 # ``spark.read.parquet(path)`` pays ~70-90 ms of driver-side schema
 # inference (file listing + footer reads) at PLAN-BUILD time, every
 # time a query callable touches a table — the flagship's five tables
 # made build time ~50% of its sf0.1 wall. Production engines resolve
 # table schemas from a metastore/catalog; this dict is that catalog's
-# in-process stand-in: infer once per (app, path, dir-mtime), then
-# ``spark.read.schema(s).parquet(path)`` (~14 ms) for every later read.
-#
-# This caches METADATA only, never data or results — every query still
-# scans the parquet files. Invalidation: the key includes the table
-# directory's st_mtime_ns, so a rewritten fixture (overwrite mode
-# recreates the directory) re-infers; a fresh driver process starts
-# empty.
-_SCHEMA_CACHE: dict[tuple, object] = {}
-_SCHEMA_CACHE_MAX = 4096  # fuzz suites touch many tmp dirs; bound it
-
-# Reader-DataFrame memo layered over the schema cache (optimization
-# r12, guide §5 — driver plan-build work): even with the schema known,
-# ``spark.read.schema(s).parquet(path)`` is ~20 ms of py4j round trips
-# per table per query BUILD (the flagship touches five tables → ~80 ms
-# per bench rep). A DataFrame is an immutable logical plan — handing
-# the same object to every query is metadata reuse, exactly like the
-# schema cache: no data, no results, and every action still scans the
-# parquet files. Keyed identically (applicationId, abspath, dir-mtime),
-# so a rewritten fixture or a new session rebuilds. Values are the
-# FINAL per-table DataFrames (events: after its ts normalization).
+# in-process stand-in. A DataFrame is an immutable logical plan, so
+# handing the same object to every query is metadata reuse only: no
+# data, no results, and every action still scans the parquet files.
+# Keyed by (applicationId, abspath, dir st_mtime_ns), so a rewritten
+# fixture (overwrite mode recreates the directory) or a new session
+# reads afresh. Values are the FINAL per-table DataFrames (events:
+# after its ts normalization).
 _DF_CACHE: dict[tuple, DataFrame] = {}
+_DF_CACHE_MAX = 4096  # fuzz suites touch many tmp dirs; bound it
 
 
 def _schema_key(spark: SparkSession, path: str) -> tuple | None:
@@ -84,21 +71,6 @@ def _schema_key(spark: SparkSession, path: str) -> tuple | None:
     except Exception:  # noqa: BLE001 — context torn down mid-call
         return None
     return (app, os.path.abspath(path), mtime)
-
-
-def _read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet`` with the inferred schema memoized per
-    (application, path, dir-mtime) — see ``_SCHEMA_CACHE``."""
-    key = _schema_key(spark, path)
-    schema = _SCHEMA_CACHE.get(key) if key is not None else None
-    if schema is not None:
-        return spark.read.schema(schema).parquet(path)
-    df = spark.read.parquet(path)
-    if key is not None:
-        if len(_SCHEMA_CACHE) >= _SCHEMA_CACHE_MAX:
-            _SCHEMA_CACHE.clear()
-        _SCHEMA_CACHE[key] = df.schema
-    return df
 
 
 @dataclass
@@ -129,7 +101,7 @@ class Catalog:
                 return cached
         df = self._read_uncached(name, path)
         if key is not None:
-            if len(_DF_CACHE) >= _SCHEMA_CACHE_MAX:
+            if len(_DF_CACHE) >= _DF_CACHE_MAX:
                 _DF_CACHE.clear()
             _DF_CACHE[key] = df
         return df
@@ -146,7 +118,7 @@ class Catalog:
             import pyspark.sql.functions as F
 
             self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            raw = _read_parquet_cached(self.spark, path)
+            raw = self.spark.read.parquet(path)
             ts_type = dict(raw.dtypes).get("ts")
             if ts_type == "bigint":
                 # integer division: float division of epoch-ns int64s
@@ -163,7 +135,7 @@ class Catalog:
                 # cast is value-identical.
                 return raw.withColumn("ts", F.col("ts").cast("timestamp"))
             return raw
-        return _read_parquet_cached(self.spark, path)
+        return self.spark.read.parquet(path)
 
     def __getattr__(self, name: str) -> DataFrame:
         if name in TABLES:

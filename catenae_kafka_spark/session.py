@@ -80,6 +80,23 @@ def _default_parallelism() -> int:
     return os.cpu_count() or 8
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` when SPARK_GRAFT_DRIVER_MEM is unset: a
+    third of physical memory, capped at 16g (a 48 GB+ host gets 16g).
+    A fixed 16g heap got the JVM OOM-killed on a 16 GB host; the third
+    leaves room for the Python workers and the page cache. Falls back
+    to 16g when ``meminfo`` is unreadable (non-Linux)."""
+    try:
+        with open(meminfo) as fh:
+            total_kb = next(
+                int(line.split()[1]) for line in fh if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "16g"
+    mb = total_kb // 3 // 1024
+    return "16g" if mb >= 16 * 1024 else f"{mb}m"
+
+
 def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime confs to an existing session (idempotent, cheap)."""
     for key, value in RUNTIME_CONF.items():
@@ -153,7 +170,10 @@ def get_spark(
         .appName(app_name)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.partitions", str(_default_parallelism()))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
     )
     for key, value in RUNTIME_CONF.items():
         builder = builder.config(key, value)

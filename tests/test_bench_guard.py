@@ -90,7 +90,6 @@ def test_scale_rung_skips_unstaged_dir_when_gated():
         key="sfx10",
         dst="/tmp/definitely-not-staged-xyz",
         k=100,
-        slack=15.0,
         n_runs=1,
         stage_if_missing=False,
     )
@@ -141,11 +140,9 @@ def test_staged_rejects_wrong_src_k_or_jitter(tmp_path):
     # pre-r11 marker: right k/src but exact-clone documents
     marker.write_text(json.dumps({"k": 10, "src": m.SRC}))
     assert not m.staged(str(tmp_path), 10)
-    assert m.staged(str(tmp_path), 10, jitter=None)  # explicit legacy probe
     marker.write_text(json.dumps({"k": 10, "src": m.SRC,
                                   "jitter": m.JITTER_MODE}))
     assert m.staged(str(tmp_path), 10)
-    assert not m.staged(str(tmp_path), 10, jitter=m.LEGACY_MODE)
     marker.unlink()
     assert not m.staged(str(tmp_path), 10)
 
@@ -173,7 +170,6 @@ def _full_record(m) -> dict:
         "worst_ratio": 3.94,
         "slack": 15.0,
         "stage_sec": 21.7,
-        "excluded": None,
         "errors": None,
         "guard_breached": None,
         "guard_failed": False,
@@ -231,7 +227,6 @@ def test_compact_record_fits_driver_tail_window():
     assert c["stream_events_per_s"] == 76_900
     assert c["sfx1"] == {
         "worst_ratio": 3.94, "guard_failed": False, "value": 32.17,
-        "excluded": None,
     }
     assert c["sfx10"]["guard_failed"] is False
     assert c["host"] == {"cpus": 32, "steal_pct_max": 6.7, "load1_max": 3.21}
@@ -390,9 +385,6 @@ def test_replicate_rejects_k_beyond_jitter_alphabet():
     m = _scale10x()
     with pytest.raises(ValueError, match="jitter alphabet"):
         m.replicate(None, "/tmp/never-written", m.JITTER_ALPHABET + 1)
-    # legacy mode has no alphabet constraint (and no jitter)
-    with pytest.raises(ValueError, match="must be >= 1"):
-        m.replicate(None, "/tmp/never-written", 0, m.LEGACY_MODE)
 
 
 def test_emit_sheds_unbounded_full_record_path(tmp_path, capsys, monkeypatch):
@@ -555,8 +547,9 @@ def test_main_emits_record_through_unreachable_stream_floor(
     monkeypatch.setattr(m, "N_GUARD_RETRIES", 1)
     monkeypatch.setattr(sources, "replay_events", lambda s, sf: None)
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", str(tmp_path / "sf0.1"))
-    monkeypatch.setenv("BENCH_MIN_STREAM_EPS", str(10**12))
-    monkeypatch.setenv("BENCH_MIN_SUSTAINED_EPS", str(10**12))
+    monkeypatch.setattr(
+        m, "STREAM_FLOORS", dict.fromkeys(m.STREAM_FLOORS, 10**12)
+    )
     monkeypatch.setenv("BENCH_SKIP_10X", "1")
     monkeypatch.setenv("BENCH_FULL_PATH", str(tmp_path / "full.json"))
     with pytest.raises(SystemExit) as exit_info:

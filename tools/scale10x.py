@@ -1,19 +1,21 @@
-"""10x scale validation: replicate the sf0.1 fixtures with disjoint key
-offsets (~sf1: 6M lineitem, 1M events, 50k docs), then time headline
-queries at both scales. Measured results live in docs/SCALE.md.
+"""Stage a k-fold replication of the sf0.1 fixtures with disjoint key
+offsets: k=10 is the sfx1 rung (~sf1: 6M lineitem, 1M events, 50k
+docs), k=100 the sfx10 rung. bench.py times its scale rungs on these
+stagings; ``tools/profile.py --sf-dir`` ladders any of them. Measured
+results live in docs/SCALE.md.
 
-Usage: python tools/scale10x.py [dst_dir]  (default /tmp/sfx1)
+Usage: python tools/scale10x.py dst [--k N]
 
 Key strides exceed the sf0.1 key ranges, so copies stay disjoint and
 every join key keeps referential integrity (the k-th copy of lineitem
 joins the k-th copy of orders, etc.).
 
-Documents are NEAR-DUP JITTERED by default (VERDICT r10 #4): a raw
-replication gives every doc k-1 exact clones, so near-dup CANDIDATES
-and OUTPUT grow as C(k,2) per clone clique — at k=100 that measured
-128.5 s of pair materialization, i.e. the synthetic corpus, not the
-plan. Copy i>0 instead gets every JITTER_STRIDE-th token replaced with
-a copy-keyed token from a 128-token alphabet: pairwise shingle-Jaccard
+Documents are NEAR-DUP JITTERED (VERDICT r10 #4): a raw replication
+gives every doc k-1 exact clones, so near-dup CANDIDATES and OUTPUT
+grow as C(k,2) per clone clique — at k=100 that measured 128.5 s of
+pair materialization, i.e. the synthetic corpus, not the plan. Copy
+i>0 instead gets every JITTER_STRIDE-th token replaced with a
+copy-keyed token from a 128-token alphabet: pairwise shingle-Jaccard
 between copies drops to ~0.14 (untouched-shingle fraction q=0.25 —
 only 3-windows starting at s≡1 mod 4 avoid a stride-4 position —
 J=q/(2-q)≈0.14), below the LSH
@@ -21,24 +23,23 @@ candidate threshold (~0.5 at 16x4 banding), so cross-copy pairs are
 mostly non-candidates and never verified output, while exact dups
 WITHIN a copy replicate linearly. Copy 0 stays pristine. The alphabet
 is small (128 tokens) on purpose: vocab-bounded ops (q_ngram_lm's
-bigram space) grow 31 -> 159 words, not O(corpus). ``--exact-clones``
-restores the legacy pathological corpus for ad-hoc comparison; the
-staging marker records the mode so a bench run can't silently time the
-wrong corpus.
+bigram space) grow 31 -> 159 words, not O(corpus). The staging marker
+records the jitter scheme so a bench run can't silently time a corpus
+staged under another one.
 """
 
 from __future__ import annotations
 
+import argparse
+import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
 from catenae_kafka_spark.catalog import TABLES, catalog
-from catenae_kafka_spark.registry import all_specs
 from catenae_kafka_spark.session import get_spark
 
 SRC = "/root/testdata/sf0.1"
@@ -51,85 +52,6 @@ STRIDES = {
     "documents": {"doc_id": 1_000_000},
     "embeddings": {"vec_id": 1_000_000},
 }
-HEADLINE = [
-    "q_flagship_revenue",
-    "q_agg_groupby",
-    "q_join_asof",
-    "q_dedup_minhash",
-    "q_knn_cosine",
-    "q_sessionize",
-    "q_window_rank",
-    # round-2 corpus-prep ops (linear shapes)
-    "q_seq_pack",
-    "q_decontaminate",
-    "q_doc_chunk",
-    # round-3 scale-path ops
-    "q_agg_bitmap_distinct",  # bitmap partials: shuffle bounded by key x bucket
-    "q_join_bloom",           # runtime bloom pruning of the fact shuffle
-    "q_pagerank",             # iterative joins over node-bounded rank table
-    "q_rolling_median",       # O(k)-bounded frame collect, one keyed shuffle
-    "q_ngram_lm",             # pair space bounded by vocab^2, not corpus
-    "q_sample_exact_k",       # TakeOrdered: O(k x partitions) movement
-    # session-continuation scale-path ops
-    "q_auc_rank",             # bucketed prefix sum, no global sort window
-    "q_skyline",              # dominance as sorted scan, not O(n^2)
-    "q_target_encode",        # broadcast partials, fact never shuffles
-    "q_embed_quantize",       # map-only higher-order array ops
-    "q_incremental_agg",      # partial-agg merge (IVM refresh shape)
-    "q_bfs_khop",             # k broadcast frontier rounds
-    # round-3 second-continuation ops
-    "q_rfm_segments",         # quantile boundaries broadcast, no global NTILE
-    "q_concurrency_peak",     # sweep partitioned by day, parallel across days
-    "q_abandoned_clicks",     # windowed rewrite of time-range EXISTS
-    "q_interpurchase_gap",    # per-customer LAG + one global agg
-    "q_funnel_timing",        # conditional-MIN grouped pass + global quantiles
-    "q_seasonal_decompose",   # daily rollup is the only big shuffle
-    "q_graph_common_neighbors",  # shared-neighbor keyed self-join
-    # round-3 sixth-pass ops
-    "q_median_two_phase",     # histogram refinement: 2 scans, no global sort
-    "q_cusum_alarm",          # prefix-sum closed form, one keyed window pass
-    "q_lang_tvd",             # sparse common-denominator TVD, pair-broadcast
-    "q_totals_reconciliation",  # keyed partial agg + one join
-    "q_event_type_affinity",  # (user,day)-keyed self-join, type-bounded width
-    "q_markov_accuracy",      # one window pass + |types|^2 rollup
-    "q_kfold_cv",             # partial-subtraction CV: one agg, k models free
-    "q_log2_histogram",       # map + ~20-key agg
-    "q_sessionize_capped",    # one user-keyed shuffle, cap is window math
-    "q_join_fanout_audit",    # the join it audits + tiny bucket agg
-    # round-3 seventh-pass ops
-    "q_max_drawdown",         # two stacked O(n) per-user window scans
-    "q_spearman_corr",        # per-nation rank windows + 25-row power sums
-    "q_decision_stump",       # fact scan reduces to 50-value domain
-    "q_isotonic_calibration",  # same domain rollup + bounded minimax join
-    "q_jackknife_ratio",      # map-side totals + shuffle-free LOO column
-    "q_equiheight_histogram",  # one boundary pass + bucket agg
-    "q_dedup_waterfall",      # one pass, key-digest distincts
-    "q_error_budget",         # day rollup + calendar-bounded window
-    "q_xcorr_hourly",         # hour rollup + 5-lag spine join
-    "q_bpe_train3",           # 3 explode+count passes, broadcast rewrites
-    # round-3 snapshot / round-4 ops
-    "q_lttb_downsample",      # calendar-bounded daily rollup + 60-bucket argmax
-    "q_itemset_triples",      # a-priori pruned in-basket triple expansion
-    "q_t_closeness",          # star join to 25x11 dense grid
-    "q_levene_test",          # (group, qty) cell rollup, <=150 cells
-    "q_runs_test",            # daily rollup + day-table windows
-    "q_littles_law",          # sessionize + boundary sweep
-    "q_brier_decomposition",  # two disjoint-slice qty rollups
-    "q_resource_allocation",  # shared-neighbor keyed self-join + degree join
-]
-
-# measured at sf0.1 only: the exact-complete set-similarity/fuzzy ops'
-# candidate volume is Σ df² over prefix/bucket tokens — on the
-# fixtures' 31-word uniform vocabulary (and the replicator's 10-clique
-# clone corpus) that term is intentionally pathological and the 10×
-# run measures output growth, not plan shape. MinHash (probabilistic,
-# in HEADLINE) is the recommended operator for such corpora; the exact
-# ops stay the oracle-checked correctness path.
-SF01_ONLY = [
-    "q_dedup_ngram_jaccard",
-    "q_fuzzy_levenshtein",
-    "q_dedup_containment",
-]
 
 
 #: completion marker written LAST by replicate(): checking any one
@@ -150,10 +72,9 @@ JITTER_STRIDE = 4
 #: jitter-token alphabet size. Copies i and j agree on a replaced
 #: position iff i ≡ j (mod JITTER_ALPHABET), so copies 128 apart would
 #: be EXACT clones again — replicate() therefore rejects k >
-#: JITTER_ALPHABET in jitter mode rather than silently reintroducing
-#: the clique pathology at a bigger k. Kept small on purpose:
-#: vocab-bounded ops (q_ngram_lm's bigram space) must grow by O(1)
-#: words, not O(corpus).
+#: JITTER_ALPHABET rather than silently reintroducing the clique
+#: pathology at a bigger k. Kept small on purpose: vocab-bounded ops
+#: (q_ngram_lm's bigram space) must grow by O(1) words, not O(corpus).
 JITTER_ALPHABET = 128
 #: marker tag for the jittered corpus; bump when the scheme changes
 # v2: n_chars recomputed after the text jitter (ADVICE r11); v3: the
@@ -161,28 +82,17 @@ JITTER_ALPHABET = 128
 # Any change to staged OUTPUT must bump this string — staged() compares
 # it, and an unbumped change no-ops behind a still-valid marker.
 JITTER_MODE = "neardup-v3"
-LEGACY_MODE = "exact-clones"
-
-#: queries NOT timed at k >= 100 (canonical set — tools/scale_ladder.py
-#: imports it). Empty since the near-dup jitter (VERDICT r10 #4):
-#: q_dedup_minhash's k=100 pathology was the replicator's exact-clone
-#: cliques (C(100,2) pairs each, measured 128.5 s), not the plan — the
-#: jittered corpus caps clique candidates/output, so minhash is timed
-#: at every rung like everyone else.
-X100_EXCLUDE = frozenset()
 
 
-def staged(dst: str, k: int, jitter: str = JITTER_MODE) -> bool:
+def staged(dst: str, k: int) -> bool:
     """True iff ``dst`` holds a COMPLETE k-fold staging OF THIS SOURCE
     in THIS jitter mode.
 
     The src/jitter checks matter as much as the k check: a dir staged
-    from a different fixture — or with the legacy exact-clone documents
-    (markers written before r11 carry no ``jitter`` key and fail here
-    BY DESIGN) — would otherwise pass and be silently timed against the
+    from a different fixture — or with the pre-r11 exact-clone
+    documents (those markers carry no ``jitter`` key and fail here BY
+    DESIGN) — would otherwise pass and be silently timed against the
     wrong corpus (ADVICE r9/r10)."""
-    import json
-
     try:
         with open(os.path.join(dst, MARKER)) as fh:
             meta = json.load(fh)
@@ -190,7 +100,7 @@ def staged(dst: str, k: int, jitter: str = JITTER_MODE) -> bool:
             isinstance(meta, dict)
             and meta.get("k") == k
             and meta.get("src") == SRC
-            and meta.get("jitter") == jitter
+            and meta.get("jitter") == JITTER_MODE
         )
     except (OSError, ValueError):
         return False
@@ -222,26 +132,20 @@ def _jitter_text(toks):
     )
 
 
-def replicate(spark, dst: str, k: int = K, jitter: str = JITTER_MODE) -> None:
+def replicate(spark, dst: str, k: int = K) -> None:
     """Write a k-fold key-shifted replication of sf0.1 into ``dst``.
 
     k=10 is the standard sfx1 (~sf1) rung; k=100 stages sfx10 (~sf10,
     60M lineitem) for the 100x ladder step. Strides only need to exceed
     the SOURCE (sf0.1) key ranges, so the same strides serve any k —
     copy offsets stay disjoint (k=100 tops out at 99 x 10M = 9.9e8,
-    far inside BIGINT). ``jitter`` selects the documents-text mode:
-    JITTER_MODE (default, near-dup copies) or LEGACY_MODE (exact
-    clones, the pre-r11 pathological corpus)."""
-    import json
-
+    far inside BIGINT)."""
     # k=0 would build F.sequence(0, -1) — a DESCENDING sequence, the
     # exact pitfall the explode below guards against — and then write a
     # marker recording the bogus staging as valid (ADVICE r9)
     if k < 1:
         raise ValueError(f"replication factor k must be >= 1, got {k}")
-    if jitter not in (JITTER_MODE, LEGACY_MODE):
-        raise ValueError(f"unknown jitter mode {jitter!r}")
-    if jitter == JITTER_MODE and k > JITTER_ALPHABET:
+    if k > JITTER_ALPHABET:
         # copies i and i+JITTER_ALPHABET would replace the same
         # positions with IDENTICAL tokens — exact clones again, i.e.
         # the clique pathology back at a bigger k with a marker that
@@ -249,7 +153,7 @@ def replicate(spark, dst: str, k: int = K, jitter: str = JITTER_MODE) -> None:
         raise ValueError(
             f"k={k} exceeds the {JITTER_ALPHABET}-token jitter alphabet "
             "(copies that far apart become exact clones); widen "
-            "JITTER_ALPHABET (and bump JITTER_MODE) or use --exact-clones"
+            "JITTER_ALPHABET and bump JITTER_MODE"
         )
 
     marker = os.path.join(dst, MARKER)
@@ -265,7 +169,7 @@ def replicate(spark, dst: str, k: int = K, jitter: str = JITTER_MODE) -> None:
             df = df.select("*", i)
             for col, stride in STRIDES[t].items():
                 df = df.withColumn(col, F.col(col) + F.col("_i") * stride)
-            if t == "documents" and jitter == JITTER_MODE:
+            if t == "documents":
                 df = df.withColumn(
                     "text", _jitter_text(F.split(F.col("text"), " "))
                 )
@@ -281,65 +185,17 @@ def replicate(spark, dst: str, k: int = K, jitter: str = JITTER_MODE) -> None:
             df = df.repartition(max(k, 8))
         df.write.mode("overwrite").parquet(f"{dst}/{t}.parquet")
     with open(marker, "w") as fh:
-        json.dump({"k": k, "src": SRC, "jitter": jitter}, fh)
+        json.dump({"k": k, "src": SRC, "jitter": JITTER_MODE}, fh)
 
 
-def main() -> None:
-    args = sys.argv[1:]
-    k = K
-    if "--k" in args:
-        i = args.index("--k")
-        # .isdigit() alone accepts "0" — see the k<1 guard in replicate()
-        if (
-            i + 1 >= len(args)
-            or not args[i + 1].isdigit()
-            or int(args[i + 1]) < 1
-        ):
-            sys.exit(
-                "usage: scale10x.py [dst] [--k N>=1] [--stage-only] "
-                "[--exact-clones] [query ...]"
-            )
-        k = int(args[i + 1])
-        del args[i : i + 2]
-    stage_only = "--stage-only" in args
-    if stage_only:
-        args.remove("--stage-only")
-    jitter = JITTER_MODE
-    if "--exact-clones" in args:
-        args.remove("--exact-clones")
-        jitter = LEGACY_MODE
-    dst = args.pop(0) if args else "/tmp/sfx1"
-    spark = get_spark("scale10x")
-    spark.range(1000).selectExpr("sum(id)").write.format("noop").mode(
-        "overwrite"
-    ).save()
-    if not staged(dst, k, jitter):
-        replicate(spark, dst, k, jitter)
-    if stage_only:
-        print(f"staged {dst} (k={k})", flush=True)
-        return
-    specs = all_specs()
-    only = set(args)  # optional query-name filter
-    if only:
-        sf01 = [n for n in SF01_ONLY if n in only]
-        headline = [n for n in HEADLINE if n in only]
-    else:
-        sf01, headline = SF01_ONLY, HEADLINE
-    if k >= 100:
-        # empty since the near-dup jitter; kept as the one hook should a
-        # future query prove corpus-pathological at the top rung only
-        headline = [n for n in headline if n not in X100_EXCLUDE]
-    for name in sf01:
-        t0 = time.perf_counter()
-        specs[name].fn(spark, SRC).write.format("noop").mode("overwrite").save()
-        print(f"sf0.1-only {name}: {time.perf_counter() - t0:.2f}s", flush=True)
-    for sf_dir, label in [(SRC, "sf0.1"), (dst, f"{dst}({k}x)")]:
-        for name in headline:
-            t0 = time.perf_counter()
-            specs[name].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            print(f"{label} {name}: {time.perf_counter() - t0:.2f}s", flush=True)
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("dst")
+    ap.add_argument("--k", type=int, default=K)
+    args = ap.parse_args(argv)
+    if not staged(args.dst, args.k):
+        replicate(get_spark("scale10x"), args.dst, args.k)
+    print(f"staged {args.dst} (k={args.k})", flush=True)
 
 
 if __name__ == "__main__":
