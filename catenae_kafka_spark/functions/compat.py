@@ -9,11 +9,6 @@ These helpers encode the engine-wide discipline:
   %H:%M:%S')``).
 - ``date_str``: timestamp[ms] date-like columns, formatted as dates
   (DuckDB side: ``strftime(col, '%Y-%m-%d')``).
-- ``money_round``: round sums at (or above) the summed expression's
-  native decimal precision. Native-precision rounds never sit on a
-  rounding boundary, so engine-specific float summation order cannot
-  flip the value. A *below*-precision round (2dp over 4dp data) can land
-  exactly on .xx5 and break.
 """
 
 from __future__ import annotations
@@ -32,7 +27,3 @@ def ts_str(col: Column | str) -> Column:
 
 def date_str(col: Column | str) -> Column:
     return F.date_format(col, "yyyy-MM-dd")
-
-
-def money_round(col: Column, scale: int = 4) -> Column:
-    return F.round(col, scale)

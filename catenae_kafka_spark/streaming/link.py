@@ -32,18 +32,11 @@ feature:
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from catenae_kafka_spark.streaming import ops, sinks
-
-
-@dataclass
-class _Branch:
-    name: str
-    df: DataFrame
 
 
 class Link:

@@ -98,14 +98,17 @@ class FileReplaySource:
     with ``maxFilesPerTrigger=files_per_trigger`` →
     n_files/files_per_trigger micro-batches (defaults: 8 files, 4 per
     trigger → 2 real data batches + watermark-advance no-data batches).
-    Per-batch fixed cost (planning + state commit + sink epoch) is
-    ~0.5 s on this host and dominates a finite replay — the round-5
-    re-measure of the ladder: 4 batches 47.9k ev/s, 2 batches 97.2k,
-    1 batch 168.6k at sf0.1. Two data batches is the floor that still
-    exercises real mid-stream watermark advancement, and
-    q_stream_batch_invariance separately PROVES result invariance
-    between 1-file-per-trigger (8 batches) and single-batch replays of
-    the same pipeline.
+    Per-batch fixed cost (planning + state commit + sink epoch) was
+    ~0.5 s and dominated a finite replay — the round-5 re-measure of the
+    ladder: 4 batches 47.9k ev/s, 2 batches 97.2k, 1 batch 168.6k at
+    sf0.1. Much of its state-commit and offset-log share was Hadoop
+    forking chmod/stat per checkpoint file write, which
+    session.LOCAL_CHECKPOINT_CONF removes on local masters (~30 → ~7 ms
+    per metadata-log write, ~26 → ~1 ms per state commit). Two data
+    batches is the floor that still exercises real mid-stream watermark
+    advancement, and q_stream_batch_invariance separately PROVES result
+    invariance between 1-file-per-trigger (8 batches) and single-batch
+    replays of the same pipeline.
 
     ``with_sentinel=True`` appends one final row far in the future
     (event_id = -1) whose only job is to push the watermark past every

@@ -16,7 +16,8 @@ Arrow batches:
   dropDuplicatesWithinWatermark).
 
 Scale: state is (key → a few floats / a short list), sharded by the
-groupBy shuffle, RocksDB-backed in production confs.
+groupBy shuffle, in Spark's default HDFS-backed state store (RocksDB
+only for transformWithState, which requires it).
 """
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""tools/profile.py: the one measurement CLI (build/exec split, plan
+"""tools/layer_profile.py: the one measurement CLI (build/exec split, plan
 counts, scale-step ratio, per-query error isolation)."""
 
 from __future__ import annotations
@@ -19,7 +19,7 @@ def _profile_tool():
     p = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "tools",
-        "profile.py",
+        "layer_profile.py",
     )
     spec = importlib.util.spec_from_file_location("profile_tool", p)
     m = importlib.util.module_from_spec(spec)

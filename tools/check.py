@@ -198,6 +198,10 @@ def main() -> int:
         del args[i : i + 2]
     wanted = set(args)
     specs = all_specs()
+    unknown = wanted - specs.keys()
+    if unknown:
+        print(f"unknown queries: {sorted(unknown)}", file=sys.stderr)
+        return 2
     if wanted:
         specs = {k: v for k, v in specs.items() if k in wanted}
     spark = get_spark("oracle-check")

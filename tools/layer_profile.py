@@ -17,7 +17,7 @@ finds subtree duplication (Catalyst does not deduplicate a reused
 DataFrame subtree). ``--explain DIR`` writes ``explain("formatted")``
 per query at the last dir.
 
-Usage: python tools/profile.py [--queries bench|all|q_a,q_b] [--reps N]
+Usage: python tools/layer_profile.py [--queries bench|all|q_a,q_b] [--reps N]
            [--sf-dir DIR ...] [--explain DIR]
 """
 
@@ -30,11 +30,7 @@ import sys
 import time
 from concurrent.futures import ThreadPoolExecutor
 
-# run as a script, sys.path[0] is tools/, where this file would shadow
-# the stdlib ``profile`` module that pyspark imports (through cProfile)
-_HERE = os.path.dirname(os.path.abspath(__file__))
-sys.path[:] = [p for p in sys.path if os.path.abspath(p or ".") != _HERE]
-sys.path.insert(0, os.path.dirname(_HERE))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from catenae_kafka_spark.catalog import DEFAULT_SF_DIR
 from catenae_kafka_spark.registry import all_specs

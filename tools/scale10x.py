@@ -1,7 +1,7 @@
 """Stage a k-fold replication of the sf0.1 fixtures with disjoint key
 offsets: k=10 is the sfx1 rung (~sf1: 6M lineitem, 1M events, 50k
 docs), k=100 the sfx10 rung. bench.py times its scale rungs on these
-stagings; ``tools/profile.py --sf-dir`` ladders any of them. Measured
+stagings; ``tools/layer_profile.py --sf-dir`` ladders any of them. Measured
 results live in docs/SCALE.md.
 
 Usage: python tools/scale10x.py dst [--k N]
