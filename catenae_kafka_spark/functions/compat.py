@@ -9,6 +9,11 @@ These helpers encode the engine-wide discipline:
   %H:%M:%S')``).
 - ``date_str``: timestamp[ms] date-like columns, formatted as dates
   (DuckDB side: ``strftime(col, '%Y-%m-%d')``).
+- ``half_up``: the one quantization policy, ``x * factor`` rounded
+  half-up to BIGINT units (DuckDB side: ``FLOOR(x * factor + 0.5)``).
+  Negative midpoints go up: -2.5 → -2, where DuckDB ``ROUND`` gives -3,
+  so an oracle must not use ``ROUND`` where Spark quantizes signed input
+  with ``half_up``.
 """
 
 from __future__ import annotations
@@ -27,3 +32,15 @@ def ts_str(col: Column | str) -> Column:
 
 def date_str(col: Column | str) -> Column:
     return F.date_format(col, "yyyy-MM-dd")
+
+
+def half_up(x: Column | str, factor=1) -> Column:
+    """x*factor rounded half-up to BIGINT units: FLOOR(x*factor + 0.5),
+    the oracle's expression.
+
+    ``x * factor`` is the same IEEE double in both engines, so the result
+    is portable even when the product lands at 4900.1999... Callers pass
+    ``factor`` as the oracle writes it (``100``, ``1e6``, ...) so Spark's
+    type coercion matches; factor 1 adds no multiply."""
+    c = F.col(x) if isinstance(x, str) else x
+    return F.floor((c * factor if factor != 1 else c) + F.lit(0.5)).cast("bigint")

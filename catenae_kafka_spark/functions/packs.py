@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from catenae_kafka_spark.catalog import catalog
+from catenae_kafka_spark.functions.compat import half_up
 from catenae_kafka_spark.registry import REGISTRY
 
 
@@ -736,7 +737,7 @@ def q_hof_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", F.dayofweek("ts").alias("dow")
     ).agg(
         F.count("*").cast("bigint").alias("n"),
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"))
+        F.sum(half_up("value", 100))
         .cast("bigint")
         .alias("cents"),
     )
@@ -1037,9 +1038,7 @@ def q_stack_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("prio")
     ).agg(
         F.count("*").cast("bigint").alias("n_orders"),
-        F.sum(
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
-        )
+        F.sum(half_up("o_totalprice", 100))
         .cast("bigint")
         .alias("cents"),
         F.countDistinct("o_custkey").cast("bigint").alias("n_cust"),

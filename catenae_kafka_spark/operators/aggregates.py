@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from catenae_kafka_spark.catalog import catalog
+from catenae_kafka_spark.functions.compat import half_up
 from catenae_kafka_spark.registry import REGISTRY
 
 #: Driver-side collect cap for q_median_two_phase's coarse histogram:
@@ -762,9 +763,7 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = catalog(spark, sf_dir)
     w = c.lineitem.select(
         "l_returnflag",
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("price_cents"),
+        half_up("l_extendedprice", 100).alias("price_cents"),
         F.col("l_quantity").cast("bigint").alias("qty"),
     )
     wcum = (
@@ -829,7 +828,7 @@ def q_median_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     smaller/larger, so the within-bucket offset-th element IS the
     global k-th."""
     c = catalog(spark, sf_dir)
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
+    cents = half_up("value", 100)
     base = c.events.select(
         "event_type", cents.alias("cents"), "event_id"
     ).withColumn("bucket", F.expr("cents div 1000"))

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from catenae_kafka_spark.catalog import catalog
+from catenae_kafka_spark.functions.compat import half_up
 from catenae_kafka_spark.registry import REGISTRY
 
 
@@ -59,9 +60,7 @@ def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = c.orders.select(
         "o_orderpriority",
         "o_orderkey",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("price_cents"),
+        half_up("o_totalprice", 100).alias("price_cents"),
         F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_day"),
     )
     per_price = q.groupBy("o_orderpriority", "price_cents").agg(
@@ -175,7 +174,7 @@ def q_impute_group_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-null values is the load-bearing semantic; the mean derives
     from exact integers so the filled value hash-matches."""
     c = catalog(spark, sf_dir)
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    cents = half_up("value", 100)
     holes = c.events.select(
         "event_id",
         "event_type",
@@ -286,7 +285,7 @@ def q_top_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact BIGINTs. The rank partitions by class; an extreme class
     reuses the bucketed prefix pattern."""
     c = catalog(spark, sf_dir)
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    cents = half_up("o_totalprice", 100)
     w_rank = Window.partitionBy("o_orderpriority").orderBy(
         cents.desc(), "o_orderkey"
     )
@@ -347,7 +346,7 @@ def q_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     never shuffles, and singleton keys yield NULL (no leak-free
     encoding exists for them) rather than a fabricated value."""
     c = catalog(spark, sf_dir)
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    cents = half_up("value", 100)
     base = c.events.select("event_id", "user_id", cents.alias("c"))
     grp = base.groupBy("user_id").agg(
         F.count("*").alias("n"), F.sum("c").alias("s")
@@ -576,7 +575,7 @@ def q_metric_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side arithmetic from exact cent sums — no second scan, no
     window, no shuffle beyond the first aggregate."""
     c = catalog(spark, sf_dir)
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    cents = half_up("o_totalprice", 100)
     split = F.lit("2000-01-01").cast("timestamp")
     per = c.orders.groupBy(
         "o_orderpriority",
@@ -659,9 +658,7 @@ def q_attribution_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             F.first(touch, ignorenulls=True).over(w).alias("first_touch"),
             F.last(touch, ignorenulls=True).over(w).alias("last_touch"),
-            F.floor(F.col("value") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("revenue_cents"),
+            half_up("value", 100).alias("revenue_cents"),
         )
         .filter(F.col("event_type") == "purchase")
         .drop("event_type")
@@ -701,7 +698,7 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     back; the clip is a map-side LEAST/GREATEST — the event table
     never shuffles."""
     c = catalog(spark, sf_dir)
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    cents = half_up("value", 100)
     q = c.events.select(
         "event_id", "event_type", cents.alias("c")
     )
@@ -845,9 +842,7 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.max(F.col("o_orderdate").cast("date")).alias("_last"),
             F.count("*").alias("frequency"),
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
-            )
+            F.sum(half_up("o_totalprice", 100))
             .cast("bigint")
             .alias("monetary_cents"),
         )
@@ -1129,7 +1124,7 @@ def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     once; at 100 TB the daily rollup is the only big shuffle."""
     c = catalog(spark, sf_dir)
     daily = c.events.groupBy(F.col("ts").cast("date").alias("day")).agg(
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"))
+        F.sum(half_up("value", 100))
         .cast("bigint")
         .alias("cents")
     )
@@ -1209,7 +1204,7 @@ def q_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(1)
         .alias("half"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
+        half_up("value", 100).alias("cents"),
     )
     per_user = halves.groupBy("user_id", "half").agg(
         F.sum("cents").cast("bigint").alias("cents")
@@ -1276,7 +1271,7 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = c.events.select(
         "user_id",
         F.col("ts").cast("date").alias("day"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
+        half_up("value", 100).alias("cents"),
     )
     firsts = ev.groupBy("user_id").agg(F.min("day").alias("cohort_day"))
     daily = (
@@ -1446,7 +1441,7 @@ def q_market_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("r_name", "n_name")
         .agg(
-            F.sum(F.floor(F.col("o_totalprice") + F.lit(0.5)).cast("bigint"))
+            F.sum(half_up("o_totalprice"))
             .cast("bigint")
             .alias("dollars")
         )
@@ -1724,7 +1719,7 @@ def q_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = c.events.select(
         "user_id",
         F.col("ts").cast("date").alias("day"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
+        half_up("value", 100).alias("cents"),
     )
     firsts = ev.groupBy("user_id").agg(F.min("day").alias("first_day"))
     is_new = F.col("day") == F.col("first_day")
@@ -1800,12 +1795,7 @@ def q_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("p_brand")
         .agg(
-            F.sum(
-                F.floor(
-                    F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000
-                    + F.lit(0.5)
-                ).cast("bigint")
-            )
+            F.sum(half_up(F.col("l_extendedprice") * (1 - F.col("l_discount")), 10000))
             .cast("bigint")
             .alias("rev_tc")
         )
@@ -1976,7 +1966,7 @@ def q_percent_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("r_name", "n_name")
         .agg(
-            F.sum(F.floor(F.col("o_totalprice") + F.lit(0.5)).cast("bigint"))
+            F.sum(half_up("o_totalprice"))
             .cast("bigint")
             .alias("dollars")
         )
@@ -2021,7 +2011,7 @@ def q_log2_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partial aggregation — the profile of a 100 TB column
     costs one scan and a few hundred shuffled bytes."""
     c = catalog(spark, sf_dir)
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
+    cents = half_up("o_totalprice", 100)
     return (
         c.orders.select(
             F.length(F.bin(cents)).cast("bigint").alias("bucket_bits"),
@@ -2657,7 +2647,7 @@ def q_palma_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection at 100 TB), one conditional global sum."""
     c = catalog(spark, sf_dir)
     per = c.orders.groupBy("o_custkey").agg(
-        F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint"))
+        F.sum(half_up("o_totalprice", 100))
         .cast("bigint")
         .alias("cents")
     )
@@ -3019,9 +3009,7 @@ def q_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") == 1)
         .select(
             "user_id",
-            F.floor(F.col("value") * 100 + F.lit(0.5))
-            .cast("bigint")
-            .alias("conv_cents"),
+            half_up("value", 100).alias("conv_cents"),
         )
     )
     exposure = (
@@ -3340,7 +3328,7 @@ def q_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one shuffle on user_id; windows scan each user's
     slice once; TakeOrdered(20) merges per-partition heaps."""
     c = catalog(spark, sf_dir)
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    cents = half_up("value", 100)
     flows = c.events.select(
         "user_id",
         "ts",
@@ -3523,11 +3511,7 @@ def q_pareto_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("c_nationkey", "o_custkey")
         .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast(
-                    "bigint"
-                )
-            )
+            F.sum(half_up("o_totalprice", 100))
             .cast("bigint")
             .alias("cents")
         )
@@ -3646,7 +3630,7 @@ def q_fifo_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by supplies+demands-1 — linear, not quadratic, because
     FIFO intervals are disjoint within each side."""
     c = catalog(spark, sf_dir)
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
+    cents = half_up("value", 100)
 
     def side(event_type: str) -> DataFrame:
         w = (

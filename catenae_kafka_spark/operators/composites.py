@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from catenae_kafka_spark.catalog import catalog
+from catenae_kafka_spark.functions.compat import half_up
 from catenae_kafka_spark.operators.checkpointing import past_gate
 from catenae_kafka_spark.registry import REGISTRY
 
@@ -656,7 +657,7 @@ def q_spend_vs_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # overflows BIGINT (~1.5e19 at sf0.01); dollar granularity keeps the
     # five power sums inside 2^63 with orders-of-magnitude headroom
     spend = c.orders.groupBy(F.col("o_custkey").alias("k")).agg(
-        F.sum(F.floor(F.col("o_totalprice") + F.lit(0.5)).cast("bigint"))
+        F.sum(half_up("o_totalprice"))
         .cast("bigint")
         .alias("x")
     )
@@ -807,12 +808,7 @@ def q_basket_economics(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = catalog(spark, sf_dir)
     sizes = c.lineitem.groupBy("l_orderkey").agg(
         F.count("*").alias("n_items"),
-        F.sum(
-            F.floor(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-                + F.lit(0.5)
-            ).cast("bigint")
-        )
+        F.sum(half_up(F.col("l_extendedprice") * (1 - F.col("l_discount")), 100))
         .cast("bigint")
         .alias("basket_cents"),
     )

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from catenae_kafka_spark.catalog import catalog
+from catenae_kafka_spark.functions.compat import half_up
 from catenae_kafka_spark.registry import REGISTRY
 
 
@@ -192,7 +193,7 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     (never averaged-of-averages), which is why the merge is lossless.
     """
     c = catalog(spark, sf_dir)
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    cents = half_up("o_totalprice", 100)
     split = F.lit("2000-01-01").cast("timestamp")
 
     def partials(df: DataFrame) -> DataFrame:
@@ -420,10 +421,7 @@ def q_incremental_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (4dp-exact money discipline)."""
     c = catalog(spark, sf_dir)
     split = "1995-01-01"
-    rev = F.floor(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000
-        + F.lit(0.5)
-    ).cast("bigint")
+    rev = half_up(F.col("l_extendedprice") * (1 - F.col("l_discount")), 10000)
     orders = c.orders.select("o_orderkey", "o_orderpriority")
 
     def partials(fact):
@@ -559,13 +557,12 @@ def q_totals_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = catalog(spark, sf_dir)
     line = c.lineitem.groupBy("l_orderkey").agg(
         F.sum(
-            F.floor(
+            half_up(
                 F.col("l_extendedprice")
                 * (1 - F.col("l_discount"))
-                * (1 + F.col("l_tax"))
-                * 100
-                + F.lit(0.5)
-            ).cast("bigint")
+                * (1 + F.col("l_tax")),
+                100,
+            )
         )
         .cast("bigint")
         .alias("line_cents")
@@ -573,9 +570,7 @@ def q_totals_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = c.orders.join(
         line, F.col("o_orderkey") == F.col("l_orderkey")
     ).select(
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("order_cents"),
+        half_up("o_totalprice", 100).alias("order_cents"),
         "line_cents",
     ).select(
         F.expr("(line_cents * 1000000) div order_cents").alias("ratio_micro")
@@ -751,9 +746,7 @@ def q_late_dim_reattribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("c_mktsegment"))
         .alias("segment"),
     )
-    dollars = F.sum(
-        F.floor(F.col("o_totalprice") + F.lit(0.5)).cast("bigint")
-    ).cast("bigint")
+    dollars = F.sum(half_up("o_totalprice")).cast("bigint")
     v1 = (
         c.orders.join(
             F.broadcast(dim_v1), F.col("o_custkey") == F.col("c_custkey")
@@ -828,7 +821,7 @@ def q_subject_access_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("event_type").cast("bigint").alias("n_types"),
         F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss").alias("first_seen"),
         F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss").alias("last_seen"),
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"))
+        F.sum(half_up("value", 100))
         .cast("bigint")
         .alias("total_cents"),
         F.array_join(
@@ -1252,7 +1245,7 @@ def q_double_charge_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = c.events.filter(F.col("event_type") == "purchase").select(
         "user_id",
         "event_id",
-        F.floor(F.col("value") + F.lit(0.5)).cast("bigint").alias("dollars"),
+        half_up("value").alias("dollars"),
         F.unix_micros("ts").alias("us"),
     )
     a = p.select(
@@ -1325,9 +1318,7 @@ def q_price_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one part-keyed partial agg (map-side combined) + a
     3-column global rollup."""
     c = catalog(spark, sf_dir)
-    unit = F.floor(
-        F.col("l_extendedprice") / F.col("l_quantity") * 100 + F.lit(0.5)
-    ).cast("bigint")
+    unit = half_up(F.col("l_extendedprice") / F.col("l_quantity"), 100)
     per = (
         c.lineitem.filter(F.col("l_quantity") > 0)
         .groupBy("l_partkey")

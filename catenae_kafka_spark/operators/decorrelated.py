@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from catenae_kafka_spark.catalog import catalog, register_views
+from catenae_kafka_spark.functions.compat import half_up
 from catenae_kafka_spark.registry import REGISTRY
 
 
@@ -108,9 +109,7 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
             "p_partkey",
             "p_name",
             "s_name",
-            F.floor(F.col("unit_cost") * 10000 + F.lit(0.5))
-            .cast("bigint")
-            .alias("best_cost_e4"),
+            half_up("unit_cost", 10000).alias("best_cost_e4"),
         )
     )
 

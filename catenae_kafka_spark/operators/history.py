@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from catenae_kafka_spark.catalog import catalog
+from catenae_kafka_spark.functions.compat import half_up
 from catenae_kafka_spark.operators.asof import asof_join
 from catenae_kafka_spark.registry import REGISTRY
 
@@ -421,11 +422,9 @@ def q_bitemporal_aswas(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = catalog(spark, sf_dir)
     corrections = c.orders.filter(F.col("o_orderkey") % 7 == 0).select(
         F.col("o_orderkey").alias("ck"),
-        F.floor(F.col("o_totalprice") * 105 + F.lit(0.5))
-        .cast("bigint")
-        .alias("new_cents"),
+        half_up("o_totalprice", 105).alias("new_cents"),
     )
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
+    cents = half_up("o_totalprice", 100)
     j = c.orders.join(
         corrections, F.col("o_orderkey") == F.col("ck"), "left"
     )

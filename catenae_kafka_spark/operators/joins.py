@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from catenae_kafka_spark.catalog import catalog
+from catenae_kafka_spark.functions.compat import half_up
 from catenae_kafka_spark.registry import REGISTRY
 
 
@@ -318,9 +319,7 @@ def q_join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.nullif((F.col("o_custkey") % 7).cast("bigint"), F.lit(6)).alias("k")
     ).agg(
         F.count("*").cast("bigint").alias("n_orders"),
-        F.sum(
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
-        )
+        F.sum(half_up("o_totalprice", 100))
         .cast("bigint")
         .alias("order_cents"),
     )

@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from catenae_kafka_spark.catalog import catalog
+from catenae_kafka_spark.functions.compat import half_up
 from catenae_kafka_spark.registry import REGISTRY
 
 BITS = 10  # each dimension scaled to [0, 1023]
@@ -226,7 +227,7 @@ def q_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .count()
     )
     assert offenders == 0, "partition pruning read a non-matching file"
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    cents = half_up("value", 100)
     return pruned.groupBy(
         F.date_format("ts", "yyyy-MM-dd").alias("day")
     ).agg(F.count("*").alias("n"), F.sum(cents).alias("cents"))
@@ -297,7 +298,7 @@ def q_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return j.groupBy("o_orderpriority").agg(
         F.count("*").cast("bigint").alias("n_orders"),
-        F.sum(F.floor(F.col("o_totalprice") + F.lit(0.5)).cast("bigint"))
+        F.sum(half_up("o_totalprice"))
         .cast("bigint")
         .alias("dollars"),
     )
@@ -626,38 +627,20 @@ def q_distribute_by_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note: DISTRIBUTE BY hashes into
     spark.sql.shuffle.partitions; pair with bucketed writes
     (q_join_bucketed) to persist the layout across jobs."""
-    c = catalog(spark, sf_dir)
-    c.orders.select(
-        "o_custkey",
-        "o_orderdate",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("cents"),
-    ).createOrReplaceTempView("orders_for_layout")
-    laid_out = spark.sql(
-        """
-        SELECT o_custkey, o_orderdate, cents
-        FROM orders_for_layout
-        DISTRIBUTE BY o_custkey
-        SORT BY o_custkey, o_orderdate
-        """
-    )
-    return laid_out.groupBy("o_custkey").agg(
+    return distributed_layout_frame(spark, sf_dir).groupBy("o_custkey").agg(
         F.count("*").cast("bigint").alias("n_orders"),
         F.sum("cents").cast("bigint").alias("total_cents"),
     )
 
 
 def distributed_layout_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The laid-out (pre-aggregation) frame of q_distribute_by_layout,
-    exposed for the physical-property test."""
+    """The laid-out (pre-aggregation) frame q_distribute_by_layout
+    aggregates; the physical-property test reads it directly."""
     c = catalog(spark, sf_dir)
     c.orders.select(
         "o_custkey",
         "o_orderdate",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("cents"),
+        half_up("o_totalprice", 100).alias("cents"),
     ).createOrReplaceTempView("orders_for_layout")
     return spark.sql(
         """
@@ -707,9 +690,7 @@ def q_snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     good = c.events.select(
         "event_id",
         "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("cents"),
+        half_up("value", 100).alias("cents"),
     )
     good.write.mode("overwrite").parquet(v1)
     # v2: a bad rewrite silently loses every 'purchase' row

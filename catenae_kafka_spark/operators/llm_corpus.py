@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from catenae_kafka_spark.catalog import catalog
+from catenae_kafka_spark.functions.compat import half_up
 from catenae_kafka_spark.functions.hof import bind
 from catenae_kafka_spark.registry import REGISTRY
 
@@ -928,9 +929,7 @@ def q_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("doc_id").cast("bigint").alias("n_docs"),
             F.count("*").cast("bigint").alias("n_spans"),
             removed.cast("bigint").alias("n_removed"),
-            F.floor(kept * 1000000.0 / F.count("*") + 0.5)
-            .cast("bigint")
-            .alias("retained_ppm"),
+            half_up(kept * 1000000.0 / F.count("*")).alias("retained_ppm"),
         )
     )
 
@@ -1001,14 +1000,11 @@ def q_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(F.col("m") & ~F.col("mprev"), 1).otherwise(0))
             .cast("bigint")
             .alias("n_spans"),
-            F.floor(
+            half_up(
                 F.sum(F.when(F.col("m"), 1).otherwise(0))
                 * 1000000.0
                 / F.count("*")
-                + 0.5
-            )
-            .cast("bigint")
-            .alias("mask_ppm"),
+            ).alias("mask_ppm"),
         )
     )
 
@@ -1170,9 +1166,7 @@ def q_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = avail.select(
         "source",
         "avail_tokens",
-        F.floor(F.sqrt(F.col("avail_tokens")) * 1000000 + 0.5)
-        .cast("bigint")
-        .alias("w_micro"),
+        half_up(F.sqrt(F.col("avail_tokens")), 1000000).alias("w_micro"),
     )
     tot = w.agg(
         F.sum("w_micro").cast("bigint").alias("w_total"),

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from catenae_kafka_spark.catalog import catalog
+from catenae_kafka_spark.functions.compat import half_up
 from catenae_kafka_spark.functions.hof import bind
 from catenae_kafka_spark.functions.ident import quote_ident as _quote_ident
 from catenae_kafka_spark.operators.checkpointing import make_checkpointer, past_gate
@@ -1499,14 +1500,11 @@ def q_substring_dedup_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_covered"),
             F.count(F.col("n_cov")).cast("bigint").alias("n_docs_hit"),
-            F.floor(
+            half_up(
                 F.sum(F.coalesce(F.col("n_cov"), F.lit(0)))
                 * 1000000.0
                 / F.sum("n_tok")
-                + 0.5
-            )
-            .cast("bigint")
-            .alias("covered_ppm"),
+            ).alias("covered_ppm"),
         )
     )
 
@@ -1595,15 +1593,12 @@ def q_dup_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cutoff").alias("n_docs_cum"),
         "n_distinct",
         (F.col("cutoff") - F.col("n_distinct")).alias("n_dups"),
-        F.floor(
+        half_up(
             F.try_divide(
                 (F.col("cutoff") - F.col("n_distinct")) * 1000000.0,
                 F.col("cutoff"),
             )
-            + 0.5
-        )
-        .cast("bigint")
-        .alias("dup_ppm"),
+        ).alias("dup_ppm"),
     )
 
 

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from catenae_kafka_spark.catalog import catalog
+from catenae_kafka_spark.functions.compat import half_up
 from catenae_kafka_spark.functions.ident import quote_ident
 from catenae_kafka_spark.registry import REGISTRY
 
@@ -646,9 +647,7 @@ def q_embed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     FLOOR(double(s)/n) — safe: a non-multiple s/n sits >= 1/n from any
     integer, far beyond double error at these magnitudes)."""
     c = catalog(spark, sf_dir)
-    comp_micro = (
-        F.floor(F.col("comp") * 1_000_000 + F.lit(0.5)).cast("bigint")
-    )
+    comp_micro = half_up("comp", 1_000_000)
     return (
         c.embeddings.select(
             "label", F.posexplode(_as_double("embedding")).alias("pos0", "comp")
@@ -720,7 +719,7 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_max(F.transform(v, lambda x: F.abs(x))) / 127.0
         ).alias("scale"),
     )
-    code = lambda x: F.floor(x / F.col("scale") + 0.5)  # noqa: E731
+    code = lambda x: half_up(x / F.col("scale"))  # noqa: E731
     computed = scaled.select(
         "vec_id",
         "label",
@@ -901,9 +900,7 @@ def quantized_codes(c, with_label: bool = False) -> DataFrame:
         .select(
             *cols,
             (F.col("pos0") + 1).alias("i"),
-            F.floor(F.col("x").cast("double") / F.col("m") * 15 + F.lit(0.5))
-            .cast("bigint")
-            .alias("c"),
+            half_up(F.col("x").cast("double") / F.col("m"), 15).alias("c"),
         )
     )
 
@@ -1441,7 +1438,7 @@ def q_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "label",
         (F.col("pos0") + 1).alias("pos"),
-        F.floor(F.col("comp") * 1000 + F.lit(0.5)).cast("bigint").alias("qc"),
+        half_up("comp", 1000).alias("qc"),
     )
     cent = q.groupBy("label", "pos").agg(
         F.sum("qc").cast("bigint").alias("s")
@@ -1606,7 +1603,7 @@ def q_embedding_isotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "vec_id",
         (F.col("pos0") + 1).alias("pos"),
-        F.floor(F.col("comp") * 1000 + F.lit(0.5)).cast("bigint").alias("qc"),
+        half_up("comp", 1000).alias("qc"),
     )
     cent = q.groupBy("pos").agg(F.sum("qc").cast("bigint").alias("s"))
     dots = (
@@ -1815,9 +1812,7 @@ def q_embed_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "label",
-            F.floor(F.col("d2") * 1000000 + 0.5)
-            .cast("bigint")
-            .alias("d2_micro"),
+            half_up("d2", 1000000).alias("d2_micro"),
         )
     )
     per_vec = best.groupBy("vec_id").agg(

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from catenae_kafka_spark.catalog import catalog
+from catenae_kafka_spark.functions.compat import half_up
 from catenae_kafka_spark.functions.hof import bind
 from catenae_kafka_spark.registry import REGISTRY
 
@@ -1883,8 +1884,8 @@ def q_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     # then divide once (the q_embed_centroids discipline). Slope is
     # invariant to scaling both axes by 1e6, so beta is unchanged up
     # to the 1e-6 quantization of each ln term.
-    lxu = F.floor(F.log(F.col("grams_cum")) * 1e6 + F.lit(0.5)).cast("bigint")
-    lyu = F.floor(F.log(F.col("vocab_cum")) * 1e6 + F.lit(0.5)).cast("bigint")
+    lxu = half_up(F.log(F.col("grams_cum")), 1e6)
+    lyu = half_up(F.log(F.col("vocab_cum")), 1e6)
     fit = (
         curve.agg(
             F.count("*").alias("_n"),
@@ -1894,14 +1895,18 @@ def q_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(lxu * lxu).alias("_sxx"),
         )
         .select(
+            # try_divide: a corpus whose grams_cum is the same at every
+            # checkpoint has a zero denominator; the oracle's x / 0.0
+            # is NULL, so the slope is NULL instead of DIVIDE_BY_ZERO
             (
-                F.floor(
-                    (F.col("_n") * F.col("_sxy") - F.col("_sx") * F.col("_sy"))
-                    .cast("double")
-                    / (F.col("_n") * F.col("_sxx") - F.col("_sx") * F.col("_sx"))
-                    .cast("double")
-                    * 1e6
-                    + F.lit(0.5)
+                half_up(
+                    F.try_divide(
+                        (F.col("_n") * F.col("_sxy") - F.col("_sx") * F.col("_sy"))
+                        .cast("double"),
+                        (F.col("_n") * F.col("_sxx") - F.col("_sx") * F.col("_sx"))
+                        .cast("double"),
+                    ),
+                    1e6,
                 )
                 / 1e6
             ).alias("heaps_beta")
@@ -2027,7 +2032,5 @@ def q_winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sel.groupBy("doc_id").agg(
         F.max("n_kg").cast("bigint").alias("n_kgrams"),
         F.count("*").cast("bigint").alias("n_fingerprints"),
-        F.floor(F.count("*") * 1000000.0 / F.max("n_kg") + 0.5)
-        .cast("bigint")
-        .alias("density_ppm"),
+        half_up(F.count("*") * 1000000.0 / F.max("n_kg")).alias("density_ppm"),
     )

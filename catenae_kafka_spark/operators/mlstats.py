@@ -25,18 +25,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from catenae_kafka_spark.catalog import catalog
+from catenae_kafka_spark.functions.compat import half_up
 from catenae_kafka_spark.operators.checkpointing import materialize
 from catenae_kafka_spark.registry import REGISTRY
-
-
-def _cents(col: str) -> "F.Column":
-    """Quantize a 2dp-valued DOUBLE column to exact integer cents.
-
-    ``v * 100`` is the same IEEE double in every engine, so
-    ``FLOOR(v*100 + 0.5)`` is engine-portable even when the product
-    lands at 4900.1999... — the oracle uses the identical expression.
-    """
-    return F.floor(F.col(col) * 100 + F.lit(0.5)).cast("long")
 
 
 def _select_order_stats(per_v: DataFrame, ks: DataFrame) -> DataFrame:
@@ -137,7 +128,7 @@ def q_auc_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     c = catalog(spark, sf_dir)
     scored = c.events.select(
-        _cents("value").alias("s"),
+        half_up("value", 100).alias("s"),
         (F.col("event_type") == "purchase").cast("long").alias("is_pos"),
     )
     by_score = scored.groupBy("s").agg(
@@ -248,7 +239,7 @@ def q_ab_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     c = catalog(spark, sf_dir)
     q = c.events.filter(F.col("event_type").isin("click", "view")).select(
-        "event_type", _cents("value").alias("c")
+        "event_type", half_up("value", 100).alias("c")
     )
     g = q.groupBy("event_type").agg(
         F.count("*").alias("n"),
@@ -339,7 +330,7 @@ def q_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_auc_rank.
     """
     c = catalog(spark, sf_dir)
-    cents = _cents("o_totalprice")
+    cents = half_up("o_totalprice", 100)
     w = Window.partitionBy("o_orderpriority").orderBy(cents, "o_orderkey")
     q = c.orders.select(
         "o_orderpriority",
@@ -526,7 +517,7 @@ def q_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-key series keep the windows partitioned; an extreme single-user
     series would reuse the bucketed prefix pattern from q_auc_rank."""
     c = catalog(spark, sf_dir)
-    cents = _cents("value")
+    cents = half_up("value", 100)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     w_all = Window.partitionBy("user_id")
     seq = c.events.select(
@@ -600,7 +591,7 @@ def q_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums — one scan, one 10-row aggregate at any scale."""
     c = catalog(spark, sf_dir)
     scored = c.events.select(
-        _cents("value").alias("c"),
+        half_up("value", 100).alias("c"),
         (F.col("event_type") == "purchase").cast("long").alias("y"),
     )
     ext = scored.agg(F.max("c").alias("mx"))
@@ -666,7 +657,7 @@ def q_acf_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     window partitions by (type, lag) over day-count-sized series; the
     lag fan-out is a 3-row broadcast cross join."""
     c = catalog(spark, sf_dir)
-    cents = _cents("value")
+    cents = half_up("value", 100)
     daily = c.events.groupBy(
         "event_type", F.to_date("ts").alias("day")
     ).agg(F.sum(cents).alias("c"))
@@ -764,7 +755,7 @@ def q_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = c.events.filter(
         F.col("event_type").isin("click", "view")
     ).select(
-        _cents("value").alias("s"),
+        half_up("value", 100).alias("s"),
         (F.col("event_type") == "click").cast("long").alias("a"),
     )
     by_score = scored.groupBy("s").agg(
@@ -850,7 +841,7 @@ def q_gains_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratios divide exact BIGINTs."""
     c = catalog(spark, sf_dir)
     scored = c.events.select(
-        _cents("value").alias("s"),
+        half_up("value", 100).alias("s"),
         "event_id",
         (F.col("event_type") == "purchase").cast("long").alias("y"),
     )
@@ -970,7 +961,7 @@ def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution moved."""
     c = catalog(spark, sf_dir)
     scored = c.events.select(
-        _cents("value").alias("c"),
+        half_up("value", 100).alias("c"),
         F.when(
             F.to_date("ts") < F.lit("2024-01-16").cast("date"), 0
         )
@@ -1188,7 +1179,7 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials — the classic bandwidth/latency trade of the method."""
     c = catalog(spark, sf_dir)
     base = c.events.filter(F.col("event_type") == "purchase").select(
-        "event_id", _cents("value").alias("c")
+        "event_id", half_up("value", 100).alias("c")
     )
     rep = base.select(
         "c",
@@ -1355,7 +1346,7 @@ def q_forecast_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     a broadcast of the 7-row model — the train table IS the model."""
     c = catalog(spark, sf_dir)
     daily = c.events.groupBy(F.col("ts").cast("date").alias("day")).agg(
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"))
+        F.sum(half_up("value", 100))
         .cast("bigint")
         .alias("cents")
     ).select(
@@ -1436,7 +1427,7 @@ def q_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.unix_micros("ts") - F.unix_micros("t0"))
                 >= (F.unix_micros("t1") - F.unix_micros("t0")) / 2
             ).alias("is_post"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
+            half_up("value", 100).alias("cents"),
         )
         .groupBy("is_treated", "is_post")
         .agg(
@@ -1940,7 +1931,7 @@ def q_poststratify(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_nationkey")
         .agg(
             F.count("*").cast("bigint").alias("n_orders"),
-            F.sum(F.floor(F.col("o_totalprice") + F.lit(0.5)).cast("bigint"))
+            F.sum(half_up("o_totalprice"))
             .cast("bigint")
             .alias("sum_dollars"),
         )
@@ -2004,7 +1995,7 @@ def q_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one map-side-combined 7-group aggregation plus one
     global square sum — a single scan, no window, no join."""
     c = catalog(spark, sf_dir)
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
+    cents = half_up("value", 100)
     base = c.events.select(
         F.weekday("ts").alias("dow"), cents.alias("cents")
     )
@@ -2080,7 +2071,7 @@ def q_median_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact per-group quantile pays) + conditional-agg selection; no
     second pass, no collect."""
     c = catalog(spark, sf_dir)
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
+    cents = half_up("value", 100)
     wp = Window.partitionBy("event_type").orderBy("cents", "event_id")
     wn = Window.partitionBy("event_type")
     t = c.events.select(
@@ -2184,7 +2175,7 @@ def q_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     split = c.events.select(
         "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
+        half_up("value", 100).alias("cents"),
         "event_id",
         is_cal.alias("is_cal"),
     )
@@ -2439,7 +2430,7 @@ def q_outlier_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection, one map-side flag + 4-cell global agg — no per-row
     window, no join on the fact table."""
     c0 = catalog(spark, sf_dir)
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
+    cents = half_up("value", 100)
     c = c0.events.select(cents.alias("cents"))
     mom = c.agg(
         F.count("*").cast("bigint").alias("n"),
@@ -2575,9 +2566,7 @@ def q_segment_ltv_mae(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("o_orderdate") < split).alias("is_train"),
         )
         .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
-            )
+            F.sum(half_up("o_totalprice", 100))
             .cast("bigint")
             .alias("cents")
         )
@@ -2646,7 +2635,7 @@ def q_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
     One user-keyed shuffle; the oracle replays the identical two-window
     closed form."""
     c = catalog(spark, sf_dir)
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
+    cents = half_up("value", 100)
     wcur = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -2825,7 +2814,7 @@ def q_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").isin("purchase", "click")
     ).select(
         "event_id",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
+        half_up("value", 100).alias("cents"),
         "event_type",
     )
     tot = base.agg(
@@ -2972,9 +2961,7 @@ def q_kfold_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_custkey",
         )
         .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
-            )
+            F.sum(half_up("o_totalprice", 100))
             .cast("bigint")
             .alias("cents")
         )
@@ -3050,7 +3037,7 @@ def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     only windows run over distinct-value/bucket summaries, and the
     9-row decile spine broadcasts onto the summary."""
     c = catalog(spark, sf_dir)
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
+    cents = half_up("value", 100)
     d = spark.range(1, 10).select(F.col("id").cast("bigint").alias("decile"))
 
     def pick(tp: str, out_col: str) -> DataFrame:
@@ -3421,7 +3408,7 @@ def q_var_es(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_median_two_phase histogram refinement at 100 TB) and one
     tail-filtered re-aggregation."""
     c = catalog(spark, sf_dir)
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
+    cents = half_up("value", 100)
     wp = Window.partitionBy("event_type").orderBy("cents", "event_id")
     wn = Window.partitionBy("event_type")
     t = c.events.select(
@@ -3592,7 +3579,7 @@ def q_survivorship_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one user-keyed agg, one 5-counter global rollup."""
     c = catalog(spark, sf_dir)
     life = c.events.groupBy("user_id").agg(
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"))
+        F.sum(half_up("value", 100))
         .cast("bigint")
         .alias("cents"),
         F.count("*").cast("bigint").alias("n_events"),
@@ -3678,7 +3665,7 @@ def q_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").isin("purchase", "click")
     ).select(
         F.when(F.col("event_type") == "purchase", "a").otherwise("b").alias("grp"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("c"),
+        half_up("value", 100).alias("c"),
     )
     s = g.groupBy("grp").agg(
         F.count("*").cast("bigint").alias("n"),
@@ -3757,7 +3744,7 @@ def q_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one filtered global power-sum aggregation."""
     c = catalog(spark, sf_dir)
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
+    cents = half_up("value", 100)
     s = c.events.filter(F.col("event_type") == "purchase").agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum(cents).cast("bigint").alias("sc"),
@@ -3835,7 +3822,7 @@ def q_location_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership, trimmed sum by interval overlap, winsorized sum by
     clamping the summary values."""
     c0 = catalog(spark, sf_dir)
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
+    cents = half_up("value", 100)
     per_v = (
         c0.events.select(cents.alias("cents"))
         .groupBy("cents")
@@ -4066,7 +4053,7 @@ def q_two_way_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("r_name").alias("a"),
             F.weekday("o_orderdate").alias("b"),
-            F.floor(F.col("o_totalprice") + F.lit(0.5)).cast("bigint").alias("y"),
+            half_up("o_totalprice").alias("y"),
         )
     )
     cells = base.groupBy("a", "b").agg(
@@ -4176,7 +4163,7 @@ def q_anomaly_threshold_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 3-row ladder (a single pass computes all three counts via
     conditional sums)."""
     c0 = catalog(spark, sf_dir)
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
+    cents = half_up("value", 100)
     cdf = c0.events.select(cents.alias("cents"))
     mom = cdf.agg(
         F.count("*").cast("bigint").alias("n"),
@@ -4292,7 +4279,7 @@ def q_var_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         == 0
     )
     split = c.events.select(
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
+        half_up("value", 100).alias("cents"),
         "event_id",
         is_cal.alias("is_cal"),
     )
@@ -4502,7 +4489,7 @@ def q_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_custkey") == F.col("c_custkey"),
         )
         .groupBy("c_custkey", "c_nationkey", "c_acctbal")
-        .agg(F.sum(_cents("o_totalprice")).cast("long").alias("spend_cents"))
+        .agg(F.sum(half_up("o_totalprice", 100)).cast("long").alias("spend_cents"))
     )
     wx = Window.partitionBy("c_nationkey").orderBy("c_acctbal")
     wy = Window.partitionBy("c_nationkey").orderBy("spend_cents")
@@ -5061,7 +5048,7 @@ def q_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to q_outlier_kappa — one moment pass, one
     exact median, one map-side flag + global 3-cell agg."""
     c0 = catalog(spark, sf_dir)
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
+    cents = half_up("value", 100)
     c = c0.events.select(cents.alias("cents"))
     mom = c.agg(
         F.count("*").cast("bigint").alias("n"),
@@ -5684,9 +5671,7 @@ def q_wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = (
         c.events.filter(F.col("event_type").isin("purchase", "click"))
         .groupBy(
-            F.floor(F.col("value") * 100 + F.lit(0.5))
-            .cast("bigint")
-            .alias("cents")
+            half_up("value", 100).alias("cents")
         )
         .agg(
             F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
@@ -5782,9 +5767,7 @@ def q_eb_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = catalog(spark, sf_dir)
     cust = c.customer.select(
         "c_nationkey",
-        F.floor(F.col("c_acctbal") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("cents"),
+        half_up("c_acctbal", 100).alias("cents"),
     )
     grp = cust.groupBy("c_nationkey").agg(
         F.count("*").cast("bigint").alias("n"),
@@ -6445,7 +6428,7 @@ def q_pinball_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = catalog(spark, sf_dir)
     split = c.events.select(
         "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
+        half_up("value", 100).alias("cents"),
         "event_id",
         (F.to_date("ts") < F.lit("2024-01-16")).alias("is_train"),
     )

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from catenae_kafka_spark.catalog import register_views
+from catenae_kafka_spark.functions.compat import half_up
 from catenae_kafka_spark.registry import REGISTRY
 
 
@@ -268,9 +269,7 @@ def q_sql_pivot_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "n_name",
         "c_mktsegment",
-        F.floor(F.col("c_acctbal") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("cents"),
+        half_up("c_acctbal", 100).alias("cents"),
     ).createOrReplaceTempView("pivot_base")
     return spark.sql(
         """

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from catenae_kafka_spark.catalog import catalog
+from catenae_kafka_spark.functions.compat import half_up
 from catenae_kafka_spark.registry import REGISTRY
 
 
@@ -471,7 +472,7 @@ def q_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = c.lineitem.select(
         F.col("l_quantity").cast("bigint").alias("x1"),
         F.floor("l_extendedprice").cast("bigint").alias("x2"),
-        F.floor(F.col("l_discount") * 100 + F.lit(0.5)).cast("bigint").alias("x3"),
+        half_up("l_discount", 100).alias("x3"),
     )
     s = base.agg(
         F.count("*").cast("bigint").alias("n"),
@@ -565,9 +566,7 @@ def q_equiheight_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket, same plan."""
     c0 = catalog(spark, sf_dir)
     c = c0.lineitem.select(
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("cents")
+        half_up("l_extendedprice", 100).alias("cents")
     )
     bounds = c.agg(
         F.expr("percentile_disc(0.25) WITHIN GROUP (ORDER BY cents)")

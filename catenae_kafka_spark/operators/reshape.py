@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from catenae_kafka_spark.catalog import catalog
+from catenae_kafka_spark.functions.compat import half_up
 from catenae_kafka_spark.registry import REGISTRY
 
 
@@ -559,9 +560,7 @@ def q_horvitz_thompson(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_custkey") == F.col("c_custkey"),
         )
         .select(
-            F.floor(F.col("o_totalprice") + F.lit(0.5))
-            .cast("bigint")
-            .alias("dollars"),
+            half_up("o_totalprice").alias("dollars"),
             F.when(
                 F.col("c_mktsegment").isin("BUILDING", "MACHINERY"), 2
             )

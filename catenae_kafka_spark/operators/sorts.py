@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from catenae_kafka_spark.catalog import catalog
+from catenae_kafka_spark.functions.compat import half_up
 from catenae_kafka_spark.registry import REGISTRY
 
 
@@ -110,9 +111,7 @@ def q_keyset_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = catalog(spark, sf_dir)
     ranked = c.orders.select(
         "o_orderkey",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("cents"),
+        half_up("o_totalprice", 100).alias("cents"),
     )
     cursor = (
         ranked.orderBy("cents", "o_orderkey")
@@ -177,9 +176,7 @@ def q_topk_merge_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = catalog(spark, sf_dir)
     ranked = c.orders.select(
         "o_orderkey",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("cents"),
+        half_up("o_totalprice", 100).alias("cents"),
         (
             F.conv(
                 F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8),
@@ -248,9 +245,7 @@ def q_null_ordering_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "o_orderkey",
         F.when(F.col("o_orderkey") % 5 == 0, F.lit(None).cast("bigint"))
-        .otherwise(
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
-        )
+        .otherwise(half_up("o_totalprice", 100))
         .alias("cents"),
     )
     return t.select(

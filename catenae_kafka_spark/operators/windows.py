@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from catenae_kafka_spark.catalog import catalog
+from catenae_kafka_spark.functions.compat import half_up
 from catenae_kafka_spark.registry import REGISTRY
 
 
@@ -922,9 +923,7 @@ def q_window_cume_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = c.orders.select(
         "o_orderkey",
         "o_orderpriority",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("cents"),
+        half_up("o_totalprice", 100).alias("cents"),
     )
     return t.select(
         "o_orderkey",
@@ -982,7 +981,7 @@ def q_window_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         F.when(
             F.col("event_type") == "purchase",
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"),
+            half_up("value", 100),
         ).alias("pur_cents"),
     )
     return t.select(
@@ -1173,9 +1172,7 @@ def q_time_window_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count("*").cast("bigint").alias("n"),
-            F.sum(
-                F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
-            )
+            F.sum(half_up("value", 100))
             .cast("bigint")
             .alias("sum_cents"),
         )

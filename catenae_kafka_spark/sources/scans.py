@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from catenae_kafka_spark.catalog import catalog
+from catenae_kafka_spark.functions.compat import half_up
 from catenae_kafka_spark.registry import REGISTRY
 
 
@@ -472,7 +473,7 @@ def q_federated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     nat = spark.read.schema("n_nationkey long, n_name string").json(
         json_dir
     )
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    cents = half_up("o_totalprice", 100)
     return (
         c.orders.join(
             F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey")
@@ -611,7 +612,7 @@ def q_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count("*").cast("bigint").alias("n"),
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"))
+            F.sum(half_up("value", 100))
             .cast("bigint")
             .alias("cents"),
         )

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from catenae_kafka_spark.catalog import catalog
+from catenae_kafka_spark.functions.compat import half_up
 from catenae_kafka_spark.registry import REGISTRY
 from catenae_kafka_spark.streaming import ops
 from catenae_kafka_spark.streaming.link import Link
@@ -997,7 +998,7 @@ def q_kappa_unified_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.first("event_type").alias("event_type"),
         F.first("value").alias("value"),
     )
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    cents = half_up("value", 100)
     return deduped.agg(
         F.count("*").alias("n"),
         F.countDistinct("user_id").alias("n_users"),
@@ -1242,9 +1243,7 @@ def q_stream_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     the type domain, not time), merged map-side each batch."""
     stream = replay_events(spark, sf_dir)
     agg = (
-        stream.withColumn(
-            "cents", F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
-        )
+        stream.withColumn("cents", half_up("value", 100))
         .groupBy("event_type")
         .agg(F.max(F.struct("cents", "event_id")).alias("m"))
         .select(
@@ -1377,9 +1376,7 @@ def q_stream_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         proj = replay_events(spark, sf_dir).select(
             "event_id",
             "event_type",
-            F.floor(F.col("value") * 100 + F.lit(0.5))
-            .cast("bigint")
-            .alias("cents"),
+            half_up("value", 100).alias("cents"),
         )
         q = (
             proj.writeStream.format("parquet")
@@ -1450,9 +1447,7 @@ def q_stream_batch_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
             "1 hour",
             [
                 F.count("*").cast("bigint").alias("n"),
-                F.sum(
-                    F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
-                )
+                F.sum(half_up("value", 100))
                 .cast("bigint")
                 .alias("cents"),
             ],
@@ -1706,10 +1701,7 @@ def q_stream_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(live)
         )
         agg = (
-            stream.withColumn(
-                "cents",
-                F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"),
-            )
+            stream.withColumn("cents", half_up("value", 100))
             .groupBy("event_type")
             .agg(
                 F.count("*").cast("bigint").alias("n"),
@@ -1849,7 +1841,7 @@ def q_stream_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
     10 minutes; complete mode over the finite replay equals the batch
     GROUP BY oracle exactly."""
     stream = replay_events(spark, sf_dir)
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
+    cents = half_up("value", 100)
     enriched = stream.withColumn("cents", cents).withColumn(
         "notional_part", F.expr("cents * cents div 100")
     )
@@ -1980,9 +1972,7 @@ def q_stream_backfill_seam(spark: SparkSession, sf_dir: str) -> DataFrame:
         # instead of raising on None arithmetic (empty-fixture fuzz);
         # no stream needs to run to prove an empty handoff
         empty = ev.select(
-            F.floor(F.col("value") * 100 + F.lit(0.5))
-            .cast("bigint")
-            .alias("cents")
+            half_up("value", 100).alias("cents")
         )
         return empty.agg(
             F.count("*").cast("bigint").alias("n_events"),
@@ -1996,9 +1986,7 @@ def q_stream_backfill_seam(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlap_us = cutoff_us - 3600000000
     batch_half = ev.filter(F.expr(f"unix_micros(ts) < {cutoff_us}")).select(
         "event_id",
-        F.floor(F.col("value") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("cents"),
+        half_up("value", 100).alias("cents"),
         F.expr("unix_micros(ts)").alias("us"),
     )
     from catenae_kafka_spark.streaming.sources import replay_tag
@@ -2011,9 +1999,7 @@ def q_stream_backfill_seam(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.expr(f"unix_micros(ts) >= {overlap_us}"))
         .select(
             "event_id",
-            F.floor(F.col("value") * 100 + F.lit(0.5))
-            .cast("bigint")
-            .alias("cents"),
+            half_up("value", 100).alias("cents"),
             F.expr("unix_micros(ts)").alias("us"),
         )
     )

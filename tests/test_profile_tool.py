@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import importlib.util
 import os
+import re
 from types import SimpleNamespace
 
 import pytest
@@ -40,6 +41,13 @@ def test_one_rep_reports_every_field_and_explain(spark, sf_dir, tmp_path):
     assert "step_ratio" not in out  # one dir: no step
     plan = (tmp_path / "q_agg_groupby.txt").read_text()
     assert "== Physical Plan ==" in plan
+    # two builds in one session get fresh expression and plan ids; the
+    # written dumps must still be byte-identical (plain diff across runs)
+    again = tmp_path / "again"
+    m.profile(spark, all_specs(), ["q_agg_groupby"], [sf_dir], reps=0,
+              explain_dir=str(again))
+    assert (again / "q_agg_groupby.txt").read_bytes() == plan.encode()
+    assert "plan_id=N" in plan and not re.search(r"#\d", plan)
 
 
 def test_zero_reps_is_a_census_without_timings(spark, sf_dir):

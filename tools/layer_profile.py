@@ -15,7 +15,9 @@ Plans are built and counted first, 8 at a time; ``--reps 0`` stops
 there, so ``--queries all --reps 0`` is the registry plan census that
 finds subtree duplication (Catalyst does not deduplicate a reused
 DataFrame subtree). ``--explain DIR`` writes ``explain("formatted")``
-per query at the last dir.
+per query at the last dir, with run-local ids (``#123``, ``plan_id=``,
+``id=``, RDD and lambda ids) and RDD call sites replaced by fixed
+tokens, so dumps from two checkouts compare with a plain ``diff -r``.
 
 Usage: python tools/layer_profile.py [--queries bench|all|q_a,q_b] [--reps N]
            [--sf-dir DIR ...] [--explain DIR]
@@ -26,6 +28,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -48,6 +51,13 @@ def select(specs: dict, queries: str) -> list[str]:
     return [q.strip() for q in queries.split(",") if q.strip()]
 
 
+def _stable(plan: str) -> str:
+    """``plan`` with run-local numbers (expression, plan, RDD and lambda
+    ids) and RDD call sites replaced by fixed tokens."""
+    plan = re.sub(r"(#|\bplan_id=|\bid=|\blambda \w_|RDD\[)\d+", r"\1N", plan)
+    return re.sub(r"(RDD\[N\]) at \S+ at [^\s,]+", r"\1", plan)
+
+
 def _error(exc: Exception) -> dict:
     return {"error": f"{type(exc).__name__}: {exc}"[:300]}
 
@@ -65,7 +75,7 @@ def profile(spark, specs: dict, names: list[str], sf_dirs: list[str],
             qe = specs[n].fn(spark, d)._jdf.queryExecution()  # noqa: SLF001
             if explain_dir and d == sf_dirs[-1]:
                 with open(os.path.join(explain_dir, f"{n}.txt"), "w") as fh:
-                    fh.write(spark._jvm.PythonSQLUtils.explainString(qe, "formatted"))  # noqa: SLF001
+                    fh.write(_stable(spark._jvm.PythonSQLUtils.explainString(qe, "formatted")))  # noqa: SLF001
             plan = qe.executedPlan().toString()
         except Exception as exc:  # noqa: BLE001 — recorded, the run goes on
             return _error(exc)
