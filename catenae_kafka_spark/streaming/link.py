@@ -11,7 +11,10 @@ feature:
   DataFrame (declarative, whole-plan optimized); ``.filter``,
   ``.flat_map`` (explode / mapInPandas) cover the 0..N-electron cases.
 - A4 setup()                  → closure state in pandas_udf iterator
-  form; broadcast variables for lookup assets.
+  form; broadcast variables for lookup assets. ``.enrich`` loads its
+  dimension once, when it is called, as ``setup()`` did: the
+  dimension is materialized then and every micro-batch broadcasts
+  that snapshot.
 - A5 multi-output routing     → ``.route(branch=cond, ...)`` producing
   per-branch sinks from one source plan.
 - A6 keyed routing/ordering   → ``.key_by(col)`` (repartition by key:
@@ -20,8 +23,11 @@ feature:
   on ``.start``; rate source for synthetic generation.
 - A9 CircularOrderedSet dedup → ``.dedup(keys, watermark=...)``
   (state-store-backed, watermark-bounded).
-- A10/A11 KV connectors       → ``.enrich(dim, on)`` stream-static join,
-  or ``.sink_foreach_batch(fn)`` for true external stores.
+- A10/A11 KV connectors       → ``.enrich(dim, on)`` stream-static join
+  against the call-time snapshot of ``dim`` (Spark's plain
+  stream-static join re-reads the dimension every batch; to pick up a
+  changed dimension, rebuild the Link), or ``.sink_foreach_batch(fn)``
+  for a live external store.
 - A12 sync/parallel + commits → checkpointLocation WAL: at-least-once
   to arbitrary sinks, exactly-once to idempotent/transactional ones —
   strictly stronger than catenae's post-transform offset commit.

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from catenae_kafka_spark.operators.checkpointing import materialize
+
 
 def tumbling_window_agg(
     events: DataFrame,
@@ -83,6 +85,13 @@ def stream_dedup(
 
 def enrich(stream: DataFrame, dim: DataFrame, on, how: str = "inner") -> DataFrame:
     """Stream-static join: per-row dimension lookup without a KV store.
-    The static side is broadcast by Catalyst when small — each
-    micro-batch joins map-side."""
-    return stream.join(F.broadcast(dim), on, how)
+
+    The bounded static ``dim`` is materialized once, when this is
+    called (catenae's ``setup()`` loading a lookup asset once per Link),
+    and broadcast from those blocks: each micro-batch joins map-side
+    without re-planning or re-scanning the dimension's source. So the
+    join sees the dimension as it was at call time; Spark's plain
+    stream-static join re-reads it every batch. To pick up a changed
+    dimension, build the Link again, or look up a live store from
+    ``sink_foreach_batch``."""
+    return stream.join(F.broadcast(materialize(dim)), on, how)

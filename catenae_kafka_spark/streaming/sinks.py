@@ -6,20 +6,30 @@ foreachBatch (the general escape hatch — external KV stores, multi-topic
 routing, idempotent upserts), kafka (when the connector jar is present).
 
 ``run_available_now`` is the bridge that lets *streaming* plans satisfy
-the *batch* driver contract: execute the full pipeline with the
-AvailableNow trigger (real micro-batch execution, real state store,
-real watermarks), block until drained, return the materialized result.
+the *batch* driver contract: execute the full pipeline (real
+micro-batch execution, real state store, real watermarks), block until
+drained, return the materialized result. It collects through a
+foreachBatch collector, not the memory sink: each micro-batch goes
+through ``checkpointing.materialize`` and stays in executor blocks, so
+no row is serialized back to the driver and no temp view is left
+registered (the memory sink keeps every drained row on the driver heap
+under its query name for the rest of the session). ``memory_sink``
+stays for callers that want that sink itself.
 """
 
 from __future__ import annotations
 
+import shutil
 import tempfile
 import threading
 import uuid
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
+
+from catenae_kafka_spark.operators.checkpointing import materialize
 
 
 # state/shuffle partition cap for finite-replay streaming queries (see
@@ -57,8 +67,17 @@ def memory_sink(
 def run_available_now(
     df: DataFrame, output_mode: str = "append", name: str | None = None
 ) -> DataFrame:
-    """Drain the whole (finite) stream through a memory sink and return
-    the result as a batch DataFrame.
+    """Drain the whole (finite) stream and return the result as a batch
+    DataFrame of the caller's session.
+
+    A foreachBatch collector passes each micro-batch through
+    ``materialize`` (one eager job, the batch's rows stay in executor
+    blocks). Complete mode keeps the last batch, append and update
+    union the batches in batch order, as the memory sink would. The
+    trailing no-data batch (the sentinel's watermark flush) is one of
+    them. No temp view is registered; the checkpoint dir is a temp dir
+    removed on return. An empty stream returns an empty DataFrame with
+    ``df.schema``.
 
     Uses processAllAvailable() + stop() rather than the AvailableNow
     trigger: AvailableNow plans one batch per input file, but stateful
@@ -68,6 +87,15 @@ def run_available_now(
     genuinely drained."""
     spark = df.sparkSession
     name = name or f"q_{uuid.uuid4().hex[:10]}"
+    batches: list[DataFrame] = []
+
+    def collect(batch: DataFrame, _epoch: int) -> None:
+        out = materialize(batch)
+        if output_mode == "complete":
+            batches.clear()
+        batches.append(out)
+
+    checkpoint = tempfile.mkdtemp(prefix="cks_run_ckpt_")
     # Stateful micro-batches pay per-(batch × state-partition) fixed
     # cost; for a short finite replay 32 state partitions are pure
     # overhead (measured ~3×). A handful is plenty locally; a production
@@ -93,9 +121,10 @@ def run_available_now(
     # silently fails to apply on some runs
     try:
         q = (
-            df.writeStream.format("memory")
+            df.writeStream.foreachBatch(collect)
             .queryName(name)
             .outputMode(output_mode)
+            .option("checkpointLocation", checkpoint)
             .start()
         )
         q.processAllAvailable()
@@ -110,7 +139,21 @@ def run_available_now(
             q.stop()
         except NameError:
             pass
-    return spark.table(name)
+        shutil.rmtree(checkpoint, ignore_errors=True)
+    if not batches:
+        return spark.createDataFrame([], df.schema)
+    return _in_session(spark, reduce(DataFrame.union, batches))
+
+
+def _in_session(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """``df``'s plan as a DataFrame of ``spark``. A foreachBatch batch
+    belongs to the stream's cloned session, which runs with AQE off
+    and the drain's temporary shuffle-partition count; the caller's
+    later queries on the result must plan with the caller's confs."""
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(  # noqa: SLF001
+        spark._jsparkSession, df._jdf.logicalPlan()  # noqa: SLF001
+    )
+    return DataFrame(jdf, spark)
 
 
 def foreach_batch_sink(

@@ -26,14 +26,21 @@ from collections import defaultdict
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
-from catenae_kafka_spark.catalog import catalog, table_path
+from catenae_kafka_spark.catalog import _schema_key, catalog, table_path
 
 
 #: Per-staging-dir locks so concurrent loaders (tools/check.py --jobs N)
 #: stage each replay layout exactly once instead of racing overwrites.
 _STAGING_LOCKS: dict[str, threading.Lock] = defaultdict(threading.Lock)
 _STAGING_LOCKS_GUARD = threading.Lock()
+
+
+#: Staged replay schemas, keyed like catalog._DF_CACHE but on the
+#: staging dir's ``_REPLAY_READY`` marker: (applicationId, marker path,
+#: marker st_mtime_ns).
+_REPLAY_SCHEMAS: dict[tuple, StructType] = {}
 
 
 def _staging_lock(path: str) -> threading.Lock:
@@ -156,7 +163,15 @@ class FileReplaySource:
         marker = os.path.join(out, "_REPLAY_READY")
         with _staging_lock(out):
             self._stage_if_needed(spark, out, marker)
-        schema = spark.read.parquet(out).schema
+        # parquet schema inference is a Spark job (~30 ms, the first of
+        # every drain); a staged layout never changes under its marker,
+        # and a re-stage writes a new marker mtime
+        key = _schema_key(spark, marker)
+        schema = _REPLAY_SCHEMAS.get(key)
+        if schema is None:
+            schema = spark.read.parquet(out).schema
+            if key is not None:
+                _REPLAY_SCHEMAS[key] = schema
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", self.files_per_trigger)

@@ -3,13 +3,18 @@ dedup, routing, kafka gating."""
 
 from __future__ import annotations
 
+import os
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from catenae_kafka_spark.catalog import catalog
 from catenae_kafka_spark.streaming.link import Link
 from catenae_kafka_spark.streaming.sinks import run_available_now
 from catenae_kafka_spark.streaming.sources import (
+    FileReplaySource,
     KafkaSource,
     RateSource,
     kafka_available,
@@ -101,6 +106,63 @@ def test_stream_static_enrich_via_link(spark):
     )
     assert out.count() > 0
     assert "c_mktsegment" in out.columns
+
+
+def test_link_enrich_reads_dimension_once(spark):
+    """``enrich`` materializes the dimension when the Link is built: the
+    plan's broadcast side is a checkpointed RDD, with no ``customer``
+    file scan for each micro-batch to re-plan and re-read. A 4-batch
+    drain still equals the batch join."""
+    sf = "/root/testdata/sf0.01"
+    c = catalog(spark, sf)
+    cols = ["event_id", "user_id", "ts", "value", "c_name", "c_mktsegment"]
+    link = (
+        Link.from_source(
+            spark, FileReplaySource(sf_dir=sf, n_files=4, files_per_trigger=1)
+        )
+        .enrich(c.customer, F.col("user_id") == F.col("c_custkey"))
+        .select(*cols)
+    )
+    analyzed = link.df._jdf.queryExecution().analyzed().toString()
+    assert "customer.parquet" not in analyzed
+    assert "LogicalRDD" in analyzed
+    got = Counter(tuple(r) for r in link.run_available().collect())
+    ref = c.events.join(c.customer, F.col("user_id") == F.col("c_custkey"))
+    assert got == Counter(tuple(r) for r in ref.select(*cols).collect())
+
+
+def test_replay_schema_memo_follows_restage(spark, tmp_path):
+    """``FileReplaySource.load`` infers the staged schema once per
+    ``_REPLAY_READY`` marker: a second load reads the memo (planted
+    here with one column dropped), and a re-staged dir, with a new
+    marker, reads its new schema."""
+    import shutil
+
+    from catenae_kafka_spark.streaming import sources
+
+    sf = str(tmp_path)
+    events = spark.range(40).select(
+        F.col("id").alias("event_id"),
+        (F.col("id") % 5).alias("user_id"),
+        F.timestamp_seconds(F.col("id") * 60).alias("ts"),
+    )
+    events.write.mode("overwrite").parquet(os.path.join(sf, "events.parquet"))
+    src = FileReplaySource(sf_dir=sf, n_files=2, files_per_trigger=1)
+    try:
+        assert src.load(spark).columns == ["event_id", "user_id", "ts"]
+        marker = os.path.join(src._staging_dir(), "_REPLAY_READY")
+        key = sources._schema_key(spark, marker)
+        planted = StructType(sources._REPLAY_SCHEMAS[key].fields[:2])
+        sources._REPLAY_SCHEMAS[key] = planted
+        assert src.load(spark).columns == ["event_id", "user_id"]
+
+        shutil.rmtree(src._staging_dir())
+        events.withColumn("extra", F.lit(1)).write.mode("overwrite").parquet(
+            os.path.join(sf, "events.parquet")
+        )
+        assert src.load(spark).columns == ["event_id", "user_id", "ts", "extra"]
+    finally:
+        shutil.rmtree(src._staging_dir(), ignore_errors=True)
 
 
 @pytest.mark.parametrize(
