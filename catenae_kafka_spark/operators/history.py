@@ -21,7 +21,6 @@ declaratively):
 from __future__ import annotations
 
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -131,15 +130,8 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ts, event_id) ordering commutes across any micro-batch slicing, so
     the streaming answer hash-matches the batch latest-per-key oracle.
     """
-    from catenae_kafka_spark.streaming.sinks import (
-        STATE_PARTITIONS,
-        foreach_batch_sink,
-    )
+    from catenae_kafka_spark.streaming.sinks import fold
     from catenae_kafka_spark.streaming.sources import replay_events
-
-    stream = replay_events(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="cks_upsert_")
-    state: dict[str, str | None] = {"dir": None}
 
     def _batch_latest(df: DataFrame) -> DataFrame:
         # struct max orders by (ts, event_id, event_type); (ts, event_id)
@@ -149,43 +141,26 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n"),
         ).select("user_id", "m.ts", "m.event_id", "m.event_type", "n")
 
-    def _merge(batch_df: DataFrame, epoch_id: int) -> None:
+    def _merge(target: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         latest = _batch_latest(batch_df)
-        if state["dir"] is not None:
-            target = spark.read.parquet(state["dir"])
-            latest = (
-                target.unionByName(latest)
-                .groupBy("user_id")
-                .agg(
-                    F.max(F.struct("ts", "event_id", "event_type")).alias("m"),
-                    F.sum("n").alias("n"),
-                )
-                .select("user_id", "m.ts", "m.event_id", "m.event_type", "n")
+        if target is None:
+            return latest
+        return (
+            target.unionByName(latest)
+            .groupBy("user_id")
+            .agg(
+                F.max(F.struct("ts", "event_id", "event_type")).alias("m"),
+                F.sum("n").alias("n"),
             )
-        new_dir = f"{base}/v{epoch_id}"
-        latest.write.mode("overwrite").parquet(new_dir)
-        state["dir"] = new_dir
+            .select("user_id", "m.ts", "m.event_id", "m.event_type", "n")
+        )
 
-    # finite-replay tuning, same rationale as run_available_now: a short
-    # replay pays per-(epoch x partition) fixed cost
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(min(STATE_PARTITIONS, int(prev)))
+    final = fold(
+        replay_events(spark, sf_dir),
+        _merge,
+        "user_id long, ts timestamp, event_id long, event_type string, n long",
     )
-    try:
-        q = foreach_batch_sink(
-            stream, _merge, checkpoint=f"{base}/_ckpt_{uuid.uuid4().hex[:8]}"
-        )
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    final_dir = state["dir"]
-    if final_dir is None:  # empty stream: keep the contract schema
-        return spark.createDataFrame(
-            [], "user_id long, last_type string, last_ts string, n_events long"
-        )
-    return spark.read.parquet(final_dir).select(
+    return final.select(
         "user_id",
         F.col("event_type").alias("last_type"),
         F.date_format("ts", WIN_FMT).alias("last_ts"),
@@ -212,10 +187,7 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed by user — open state is one row per active entity, closed
     intervals are append-only and never reshuffled.
     """
-    from catenae_kafka_spark.streaming.sinks import (
-        STATE_PARTITIONS,
-        foreach_batch_sink,
-    )
+    from catenae_kafka_spark.streaming.sinks import drain, foreach_batch_sink
     from catenae_kafka_spark.streaming.sources import replay_events
 
     stream = replay_events(spark, sf_dir)
@@ -232,7 +204,8 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id", "event_type", "ts", "event_id", F.lit(1).alias("weight")
         )
         if state["open"] is not None:
-            pseudo = spark.read.parquet(state["open"]).select(
+            # the drain's clone: planned at its partition count
+            pseudo = state["spark"].read.parquet(state["open"]).select(
                 "user_id",
                 F.col("state").alias("event_type"),
                 F.col("valid_from").alias("ts"),
@@ -272,18 +245,11 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
             state["closed_dirs"].append(closed_dir)
         state["open"] = open_dir
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(min(STATE_PARTITIONS, int(prev)))
-    )
-    try:
-        q = foreach_batch_sink(
-            stream, _advance, checkpoint=f"{base}/_ckpt_{uuid.uuid4().hex[:8]}"
-        )
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    def _start(s: DataFrame):
+        state["spark"] = s.sparkSession
+        return foreach_batch_sink(s, _advance, checkpoint=f"{base}/_ckpt")
+
+    drain(stream, _start)
     empty_schema = (
         "user_id long, state string, valid_from string, valid_to string, "
         "is_current boolean, n_events long"

@@ -103,43 +103,16 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: running state is O(k) rows regardless of stream
     length; per epoch the shuffle carries <= k rows per batch
     partition."""
-    import tempfile
-    import uuid
-
-    from catenae_kafka_spark.streaming.sinks import (
-        STATE_PARTITIONS,
-        foreach_batch_sink,
-    )
+    from catenae_kafka_spark.streaming.sinks import fold
     from catenae_kafka_spark.streaming.sources import replay_events
 
-    stream = replay_events(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="cks_hh_")
-    state: dict[str, str | None] = {"dir": None}
-
-    def _merge(batch_df: DataFrame, epoch_id: int) -> None:
+    def _merge(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         partial = misra_gries_partials(batch_df, "event_type", 8)
-        if state["dir"] is not None:
-            partial = spark.read.parquet(state["dir"]).unionByName(partial)
-        merged = partial.groupBy("item").agg(F.sum("est").alias("est"))
-        new_dir = f"{base}/v{epoch_id}"
-        merged.write.mode("overwrite").parquet(new_dir)
-        state["dir"] = new_dir
+        if prev is not None:
+            partial = prev.unionByName(partial)
+        return partial.groupBy("item").agg(F.sum("est").alias("est"))
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(min(STATE_PARTITIONS, int(prev)))
-    )
-    try:
-        q = foreach_batch_sink(
-            stream, _merge, checkpoint=f"{base}/_ckpt_{uuid.uuid4().hex[:8]}"
-        )
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    if state["dir"] is None:
-        return spark.createDataFrame([], "item string, est long")
-    return spark.read.parquet(state["dir"])
+    return fold(replay_events(spark, sf_dir), _merge, "item string, est long")
 
 
 CMS_D, CMS_W = 4, 64
@@ -230,45 +203,17 @@ def q_stream_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     collision-free-on-this-domain exactness as q_count_min; the
     running state is d*w = 256 cells regardless of stream length).
     Point queries read the final merged sketch."""
-    import tempfile
-    import uuid
-
-    from catenae_kafka_spark.catalog import catalog as _catalog
-    from catenae_kafka_spark.streaming.sinks import (
-        STATE_PARTITIONS,
-        foreach_batch_sink,
-    )
+    from catenae_kafka_spark.streaming.sinks import fold
     from catenae_kafka_spark.streaming.sources import replay_events
 
-    stream = replay_events(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="cks_cms_")
-    state: dict[str, str | None] = {"dir": None}
-
-    def _merge(batch_df: DataFrame, epoch_id: int) -> None:
+    def _merge(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         partial = cms_cells(batch_df, "event_type")
-        if state["dir"] is not None:
-            partial = spark.read.parquet(state["dir"]).unionByName(partial)
-        merged = partial.groupBy("r", "col").agg(F.sum("n").alias("n"))
-        new_dir = f"{base}/v{epoch_id}"
-        merged.write.mode("overwrite").parquet(new_dir)
-        state["dir"] = new_dir
+        if prev is not None:
+            partial = prev.unionByName(partial)
+        return partial.groupBy("r", "col").agg(F.sum("n").alias("n"))
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(min(STATE_PARTITIONS, int(prev)))
-    )
-    try:
-        q = foreach_batch_sink(
-            stream, _merge, checkpoint=f"{base}/_ckpt_{uuid.uuid4().hex[:8]}"
-        )
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    if state["dir"] is None:
-        return spark.createDataFrame([], "item string, est long")
-    cells = spark.read.parquet(state["dir"])
-    items = _catalog(spark, sf_dir).events.select("event_type").distinct()
+    cells = fold(replay_events(spark, sf_dir), _merge, "r int, col long, n long")
+    items = catalog(spark, sf_dir).events.select("event_type").distinct()
     return cms_point_estimates(cells, items, "event_type")
 
 
@@ -291,18 +236,12 @@ def q_stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets, independent of stream length; the final read is
     bitmap_count. Oracle = plain COUNT(DISTINCT) over the same
     events."""
-    import tempfile
-    import uuid
-
-    from catenae_kafka_spark.streaming.sinks import (
-        STATE_PARTITIONS,
-        foreach_batch_sink,
-    )
+    from catenae_kafka_spark.streaming.sinks import fold
     from catenae_kafka_spark.streaming.sources import replay_events
 
-    def cells_of(df: DataFrame) -> DataFrame:
-        return (
-            df.select(
+    def _merge(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+        partial = (
+            batch_df.select(
                 "event_type",
                 F.bitmap_bucket_number("user_id").alias("bucket"),
                 F.bitmap_bit_position("user_id").alias("pos"),
@@ -310,40 +249,19 @@ def q_stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("event_type", "bucket")
             .agg(F.bitmap_construct_agg("pos").alias("bm"))
         )
-
-    stream = replay_events(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="cks_bmd_")
-    state: dict[str, str | None] = {"dir": None}
-
-    def _merge(batch_df: DataFrame, epoch_id: int) -> None:
-        partial = cells_of(batch_df)
-        if state["dir"] is not None:
-            partial = spark.read.parquet(state["dir"]).unionByName(partial)
-        merged = partial.groupBy("event_type", "bucket").agg(
+        if prev is not None:
+            partial = prev.unionByName(partial)
+        return partial.groupBy("event_type", "bucket").agg(
             F.bitmap_or_agg("bm").alias("bm")
         )
-        new_dir = f"{base}/v{epoch_id}"
-        merged.write.mode("overwrite").parquet(new_dir)
-        state["dir"] = new_dir
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(min(STATE_PARTITIONS, int(prev)))
+    cells = fold(
+        replay_events(spark, sf_dir),
+        _merge,
+        "event_type string, bucket long, bm binary",
     )
-    try:
-        q = foreach_batch_sink(
-            stream, _merge, checkpoint=f"{base}/_ckpt_{uuid.uuid4().hex[:8]}"
-        )
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    if state["dir"] is None:
-        return spark.createDataFrame([], "event_type string, n_users long")
-    return (
-        spark.read.parquet(state["dir"])
-        .groupBy("event_type")
-        .agg(F.sum(F.bitmap_count("bm")).cast("long").alias("n_users"))
+    return cells.groupBy("event_type").agg(
+        F.sum(F.bitmap_count("bm")).cast("long").alias("n_users")
     )
 
 

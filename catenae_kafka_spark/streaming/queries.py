@@ -2,10 +2,11 @@
 
 Each runs a REAL Structured Streaming pipeline — multi-micro-batch file
 replay of the events table, watermarks, state-store aggregation/joins —
-drained synchronously via the AvailableNow trigger, returning the
-materialized result as a batch DataFrame. The DuckDB oracle states the
-same result in batch SQL over the same events, so streaming execution
-is value-hash-checked, not just rows-counted.
+drained synchronously by ``sinks.drain`` (processAllAvailable on a
+session clone), returning the materialized result as a batch
+DataFrame. The DuckDB oracle states the same result in batch SQL over
+the same events, so streaming execution is value-hash-checked, not just
+rows-counted.
 """
 
 from __future__ import annotations
@@ -20,7 +21,14 @@ from catenae_kafka_spark.functions.compat import half_up
 from catenae_kafka_spark.registry import REGISTRY
 from catenae_kafka_spark.streaming import ops
 from catenae_kafka_spark.streaming.link import Link
-from catenae_kafka_spark.streaming.sinks import run_available_now
+from catenae_kafka_spark.streaming.sinks import (
+    drain,
+    foreach_batch_sink,
+    in_session,
+    memory_sink,
+    parquet_sink,
+    run_available_now,
+)
 from catenae_kafka_spark.streaming.sources import replay_events
 
 from catenae_kafka_spark.streaming.stateful import (
@@ -580,14 +588,11 @@ def q_stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch commits."""
     import tempfile
 
-    from catenae_kafka_spark.streaming.sinks import parquet_sink
-
     stream = replay_events(spark, sf_dir, n_files=4).select(
         "event_id", "event_type", "value"
     )
     out = tempfile.mkdtemp(prefix="cks_stream_pq_")
-    q = parquet_sink(stream, out, available_now=True)
-    q.awaitTermination()
+    drain(stream, lambda s: parquet_sink(s, out))
     back = spark.read.parquet(out)
     return back.groupBy("event_type").agg(
         F.count("*").alias("n"),
@@ -619,7 +624,6 @@ def q_stream_custom_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation. The oracle is the batch SQL over the same arithmetic
     generation — a custom streaming source, value-hash-checked."""
     from catenae_kafka_spark.sources.synthetic import register
-    from catenae_kafka_spark.streaming.sinks import run_available_now
 
     register(spark)
     gen = (
@@ -661,17 +665,16 @@ def q_stream_sink_custom_kv(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = replay_events(spark, sf_dir, n_files=4).select(
         "event_id", "event_type"
     )
-    q = (
-        stream.writeStream.format("kv_store")
+    drain(
+        stream,
+        lambda s: s.writeStream.format("kv_store")
         .option("path", out)
         .option(
             "checkpointLocation", tempfile.mkdtemp(prefix="cks_stream_kv_ckpt_")
         )
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .start(),
     )
-    q.awaitTermination()
     back = spark.read.json(f"{out}/committed/*/", schema="event_id long, event_type string")
     return back.groupBy("event_type").agg(F.count("*").alias("n"))
 
@@ -978,7 +981,6 @@ def q_kappa_unified_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from catenae_kafka_spark.catalog import catalog
-    from catenae_kafka_spark.streaming.sinks import parquet_sink
 
     cut = F.lit("2024-01-16").cast("timestamp")
     redeliver_from = F.lit("2024-01-13").cast("timestamp")
@@ -989,8 +991,7 @@ def q_kappa_unified_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts") >= redeliver_from
     ).select(*cols)
     out = tempfile.mkdtemp(prefix="cks_kappa_")
-    q = parquet_sink(tail_stream, out, available_now=True)
-    q.awaitTermination()
+    drain(tail_stream, lambda s: parquet_sink(s, out))
     tail = spark.read.parquet(out)
     unified = history.unionByName(tail)
     deduped = unified.groupBy("event_id").agg(
@@ -1025,25 +1026,19 @@ def q_stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch oracle instead of eyeballed.
 
     The distinct-id count rides along through the memory sink to prove
-    the data path agrees with the metrics path."""
-    import uuid as _uuid
-
+    the data path agrees with the metrics path. The sink's temp view
+    lives in the drain's session clone and is read from there."""
     stream = replay_events(spark, sf_dir).select("event_id")
-    name = f"progress_{_uuid.uuid4().hex[:8]}"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        metric_rows = sum(
-            p["numInputRows"] for p in (q.recentProgress or [])
-        )
-    finally:
-        q.stop()
-    sunk = spark.table(name)
+    name = _name("progress")
+    clone: list[SparkSession] = []
+
+    def start(s: DataFrame):
+        clone.append(s.sparkSession)
+        return memory_sink(s, name)
+
+    q = drain(stream, start)
+    metric_rows = sum(p["numInputRows"] for p in (q.recentProgress or []))
+    sunk = in_session(spark, clone[0].table(name))
     return sunk.agg(
         F.lit(metric_rows).cast("long").alias("total_input_rows"),
         F.countDistinct("event_id").alias("distinct_ids"),
@@ -1372,28 +1367,17 @@ def q_stream_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = _os.path.join(base, "ckpt")
     _os.makedirs(base, exist_ok=True)
 
-    def drain() -> None:
+    def drain_once() -> None:
         proj = replay_events(spark, sf_dir).select(
             "event_id",
             "event_type",
             half_up("value", 100).alias("cents"),
         )
-        q = (
-            proj.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            q.awaitTermination()
+        drain(proj, lambda s: parquet_sink(s, sink, checkpoint=ckpt))
 
-    drain()
+    drain_once()
     n1 = spark.read.parquet(sink).count()
-    drain()  # same checkpoint: must be a no-op
+    drain_once()  # same checkpoint: must be a no-op
     n2 = spark.read.parquet(sink).count()
     if n1 != n2:
         raise RuntimeError(
@@ -1575,19 +1559,12 @@ def q_stream_sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     proj = replay_events(spark, sf_dir).select(
         "event_id", "event_type", F.dayofmonth("ts").alias("day_of_month")
     )
-    q = (
-        proj.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .partitionBy("event_type")
-        .outputMode("append")
-        .start()
+    drain(
+        proj,
+        lambda s: parquet_sink(
+            s, sink, checkpoint=ckpt, partition_by=("event_type",)
+        ),
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
     # explicit schema: an EMPTY stream commits no part files and
     # read-back inference fails (empty-fixture fuzz); also skips the
     # footer-sampling job on the non-empty path
@@ -1714,17 +1691,7 @@ def q_stream_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "append"
             ).parquet(log)
 
-        q = (
-            agg.writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            q.awaitTermination()
+        drain(agg, lambda s: foreach_batch_sink(s, upsert, checkpoint=ckpt))
 
     # phase 1: half the data arrives, query runs, then "dies"
     for f in files[:2]:
@@ -2003,18 +1970,7 @@ def q_stream_backfill_seam(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("unix_micros(ts)").alias("us"),
         )
     )
-    q = (
-        live.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
+    drain(live, lambda s: parquet_sink(s, sink, checkpoint=ckpt))
     merged = batch_half.unionByName(spark.read.parquet(sink)).dropDuplicates(
         ["event_id"]
     )

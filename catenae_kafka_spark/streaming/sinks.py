@@ -1,27 +1,36 @@
-"""Streaming sinks (catenae A2/A5 analog) + synchronous runners.
+"""Streaming sinks (catenae A2/A5 analog) + the finite-stream drain.
 
 Catenae produced pickled messages back to Kafka topics; here a sink is
 a writeStream target: memory (tests/oracles), parquet/partitioned files,
 foreachBatch (the general escape hatch — external KV stores, multi-topic
 routing, idempotent upserts), kafka (when the connector jar is present).
 
-``run_available_now`` is the bridge that lets *streaming* plans satisfy
-the *batch* driver contract: execute the full pipeline (real
-micro-batch execution, real state store, real watermarks), block until
-drained, return the materialized result. It collects through a
-foreachBatch collector, not the memory sink: each micro-batch goes
-through ``checkpointing.materialize`` and stays in executor blocks, so
-no row is serialized back to the driver and no temp view is left
-registered (the memory sink keeps every drained row on the driver heap
-under its query name for the rest of the session). ``memory_sink``
-stays for callers that want that sink itself.
+``drain`` is the one way a finite stream is run to completion: it
+starts the sink on a clone of the stream's session whose shuffle
+partition count is ``STATE_PARTITIONS``, blocks until the sources are
+drained, and stops the query. The caller's session is never written,
+so drains that overlap in one session (``tools/check.py --jobs``, the
+test suite's build pool) cannot see each other's partition count.
+Two shapes build on it:
+
+- ``run_available_now`` lets *streaming* plans satisfy the *batch*
+  driver contract: execute the full pipeline (real micro-batch
+  execution, real state store, real watermarks), block until drained,
+  return the materialized result. It collects through a foreachBatch
+  collector, not the memory sink: each micro-batch goes through
+  ``checkpointing.materialize`` and stays in executor blocks, so no row
+  is serialized back to the driver and no temp view is left registered
+  (the memory sink keeps every drained row on the driver heap under its
+  query name). ``memory_sink`` stays for callers that want that sink
+  itself.
+- ``fold`` keeps a running table as versioned parquet dirs, one per
+  epoch (foreachBatch merge queries: upserts, mergeable sketches).
 """
 
 from __future__ import annotations
 
 import shutil
 import tempfile
-import threading
 import uuid
 from collections.abc import Callable
 from functools import reduce
@@ -32,8 +41,8 @@ from pyspark.sql.streaming import StreamingQuery
 from catenae_kafka_spark.operators.checkpointing import materialize
 
 
-# state/shuffle partition cap for finite-replay streaming queries (see
-# run_available_now); measured on local[32], sf0.1 tumbling bench:
+# shuffle partition count of every drain's session clone (its one
+# reader is drain); measured on local[32], sf0.1 tumbling bench:
 # 32→8 ≈3×, 8→4 ≈1.6×, 4→2 ≈1.23× (49k → 61k events/s), 2→1 ≈1.5×
 # (round-5 re-measure, same host) — per-batch per-partition state-store
 # commit cost dominates short replays, so the ladder bottoms out at 1.
@@ -47,11 +56,6 @@ from catenae_kafka_spark.operators.checkpointing import materialize
 # key cardinality instead.
 STATE_PARTITIONS = 1
 
-#: Refcounted shuffle-partition override shared by every concurrent
-#: run_available_now: [active_count, value_to_restore].
-_CONF_LOCK = threading.Lock()
-_CONF_DEPTH: list = [0, None]
-
 
 def memory_sink(
     df: DataFrame, name: str, output_mode: str = "append"
@@ -62,6 +66,43 @@ def memory_sink(
         .outputMode(output_mode)
         .start()
     )
+
+
+def drain(
+    df: DataFrame, start: Callable[[DataFrame], StreamingQuery]
+) -> StreamingQuery:
+    """Run the finite stream ``df`` to completion; return the stopped
+    query (its ``recentProgress`` stays readable).
+
+    ``start`` gets ``df`` rebound to a clone of its session and starts
+    the sink on it. The clone keeps the caller's confs (AQE included)
+    but runs ``STATE_PARTITIONS`` shuffle partitions, so the stream's
+    state operators, and any batch work a foreachBatch callback plans
+    on the stream's ``sparkSession``, use that count while the caller's
+    session keeps its own. A clone has its own streaming listener bus:
+    the caller's listeners are attached to it, so they still see every
+    drain.
+
+    Uses processAllAvailable() + stop() rather than the AvailableNow
+    trigger: AvailableNow plans one batch per input file, but stateful
+    queries insert no-data maintenance batches (watermark eviction) that
+    consume the planned budget — observed terminating with input files
+    left unread. processAllAvailable blocks until the sources are
+    genuinely drained."""
+    spark = df.sparkSession
+    clone = SparkSession(
+        spark.sparkContext, spark._jsparkSession.cloneSession()  # noqa: SLF001
+    )
+    clone.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
+    streams = clone._jsparkSession.streams()  # noqa: SLF001
+    for listener in spark._jsparkSession.streams().listListeners():  # noqa: SLF001
+        streams.addListener(listener)
+    q = start(in_session(clone, df))
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return q
 
 
 def run_available_now(
@@ -77,14 +118,7 @@ def run_available_now(
     trailing no-data batch (the sentinel's watermark flush) is one of
     them. No temp view is registered; the checkpoint dir is a temp dir
     removed on return. An empty stream returns an empty DataFrame with
-    ``df.schema``.
-
-    Uses processAllAvailable() + stop() rather than the AvailableNow
-    trigger: AvailableNow plans one batch per input file, but stateful
-    queries insert no-data maintenance batches (watermark eviction) that
-    consume the planned budget — observed terminating with input files
-    left unread. processAllAvailable blocks until the sources are
-    genuinely drained."""
+    ``df.schema``."""
     spark = df.sparkSession
     name = name or f"q_{uuid.uuid4().hex[:10]}"
     batches: list[DataFrame] = []
@@ -96,60 +130,62 @@ def run_available_now(
         batches.append(out)
 
     checkpoint = tempfile.mkdtemp(prefix="cks_run_ckpt_")
-    # Stateful micro-batches pay per-(batch × state-partition) fixed
-    # cost; for a short finite replay 32 state partitions are pure
-    # overhead (measured ~3×). A handful is plenty locally; a production
-    # always-on query sizes this to its key cardinality instead.
-    #
-    # The set/restore is refcounted under a lock so CONCURRENT callers
-    # (tools/check.py --jobs N) compose: the first entrant records the
-    # caller-visible value, the last one restores it — interleaved
-    # restores can never capture another runner's temporary 1 as "prev"
-    # and leak it past the sweep.
-    with _CONF_LOCK:
-        if _CONF_DEPTH[0] == 0:
-            _CONF_DEPTH[1] = spark.conf.get("spark.sql.shuffle.partitions")
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(min(STATE_PARTITIONS, int(_CONF_DEPTH[1]))),
-            )
-        _CONF_DEPTH[0] += 1
-    # the streaming thread captures session confs asynchronously after
-    # start(), so the reduced partition count must stay in place until
-    # the query has fully drained — restoring in a finally around
-    # start() races the capture and the ~3× state-partition speedup
-    # silently fails to apply on some runs
     try:
-        q = (
-            df.writeStream.foreachBatch(collect)
+        drain(
+            df,
+            lambda stream: stream.writeStream.foreachBatch(collect)
             .queryName(name)
             .outputMode(output_mode)
             .option("checkpointLocation", checkpoint)
-            .start()
+            .start(),
         )
-        q.processAllAvailable()
     finally:
-        with _CONF_LOCK:
-            _CONF_DEPTH[0] -= 1
-            if _CONF_DEPTH[0] == 0:
-                spark.conf.set(
-                    "spark.sql.shuffle.partitions", _CONF_DEPTH[1]
-                )
-        try:
-            q.stop()
-        except NameError:
-            pass
         shutil.rmtree(checkpoint, ignore_errors=True)
     if not batches:
         return spark.createDataFrame([], df.schema)
-    return _in_session(spark, reduce(DataFrame.union, batches))
+    return in_session(spark, reduce(DataFrame.union, batches))
 
 
-def _in_session(spark: SparkSession, df: DataFrame) -> DataFrame:
+def fold(
+    df: DataFrame,
+    step: Callable[[DataFrame | None, DataFrame], DataFrame],
+    empty_schema: str,
+) -> DataFrame:
+    """Drain ``df`` into a running table and return its last version in
+    the caller's session (empty, with ``empty_schema``, when no
+    micro-batch arrived).
+
+    Epoch ``e`` writes ``step(prev, batch)`` to a NEW parquet dir
+    ``v{e}``, ``prev`` being the previous version read through the
+    drain's clone (None in the first epoch): the write-then-repoint
+    pattern that is atomic on object stores (Delta/Iceberg MERGE
+    formalize exactly this)."""
+    spark = df.sparkSession
+    base = tempfile.mkdtemp(prefix="cks_fold_")
+    versions: list[str] = []
+
+    def start(stream: DataFrame) -> StreamingQuery:
+        clone = stream.sparkSession
+
+        def merge(batch: DataFrame, epoch_id: int) -> None:
+            prev = clone.read.parquet(versions[-1]) if versions else None
+            path = f"{base}/v{epoch_id}"
+            step(prev, batch).write.mode("overwrite").parquet(path)
+            versions.append(path)
+
+        return foreach_batch_sink(stream, merge, checkpoint=f"{base}/_ckpt")
+
+    drain(df, start)
+    if not versions:
+        return spark.createDataFrame([], empty_schema)
+    return spark.read.parquet(versions[-1])
+
+
+def in_session(spark: SparkSession, df: DataFrame) -> DataFrame:
     """``df``'s plan as a DataFrame of ``spark``. A foreachBatch batch
     belongs to the stream's cloned session, which runs with AQE off
-    and the drain's temporary shuffle-partition count; the caller's
-    later queries on the result must plan with the caller's confs."""
+    and the drain's shuffle-partition count; the caller's later
+    queries on the result must plan with the caller's confs."""
     jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(  # noqa: SLF001
         spark._jsparkSession, df._jdf.logicalPlan()  # noqa: SLF001
     )
@@ -182,7 +218,6 @@ def parquet_sink(
     path: str,
     checkpoint: str | None = None,
     partition_by: tuple[str, ...] = (),
-    available_now: bool = False,
 ) -> StreamingQuery:
     checkpoint = checkpoint or tempfile.mkdtemp(prefix="cks_pq_ckpt_")
     writer = (
@@ -193,8 +228,6 @@ def parquet_sink(
     )
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
     return writer.start()
 
 

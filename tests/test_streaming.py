@@ -472,14 +472,16 @@ def test_offline_state_store_inspection(spark, tmp_path):
 def test_state_partition_count_invariance(spark):
     """The bench ladder bottoms STATE_PARTITIONS at 1 (per-batch
     per-partition state-commit cost dominates short finite replays);
-    this test is the standing proof that the SAME stateful plan is
-    correct under a real multi-partition state shuffle — the tumbling
-    watermark agg must produce identical results at 1 and 4 state
-    partitions."""
+    this test is the standing proof that the SAME plans are correct
+    under a real multi-partition shuffle — the tumbling watermark agg
+    (state shuffle) and the count-min fold (per-epoch merge planned on
+    the drain's session clone) must produce identical results at 1 and
+    4 partitions."""
     import catenae_kafka_spark.streaming.sinks as sinks
+    from catenae_kafka_spark.operators.sketches import q_stream_count_min
     from catenae_kafka_spark.streaming import ops
 
-    results = {}
+    results, cms = {}, {}
     orig = sinks.STATE_PARTITIONS
     try:
         for sp in (1, 4):
@@ -495,7 +497,10 @@ def test_state_partition_count_invariance(spark):
             results[sp] = {
                 tuple(str(v) for v in r) for r in out.collect()
             }
+            cms[sp] = sorted(q_stream_count_min(spark, SF).collect())
     finally:
         sinks.STATE_PARTITIONS = orig
     assert results[1] == results[4]
     assert len(results[1]) > 0
+    assert cms[1] == cms[4]
+    assert len(cms[1]) > 0

@@ -224,7 +224,7 @@ def main() -> int:
     else:
         # one Spark session shared by N worker threads (Spark job
         # submission is thread-safe; streaming query names are uuid-unique;
-        # run_available_now's conf override is refcounted); DuckDB
+        # every drain runs on its own session clone); DuckDB
         # connections are NOT thread-safe -> one per worker thread.
         import threading
         from concurrent.futures import ThreadPoolExecutor

@@ -17,7 +17,7 @@ enforced globally here so a NEW query can't silently regress them):
   aggregate summaries (the q_auc_rank two-phase bucketed prefix sum);
   see plans/shape.py.
 
-Streaming queries execute inside their fns (run_available_now), so the
+Streaming queries execute inside their fns (sinks.drain), so the
 audit inspects the RETURNED batch DataFrame's plan — the post-sink
 shape — and their streaming internals stay covered by
 tests/test_streaming.py; queries tagged 'streaming' are skipped here
