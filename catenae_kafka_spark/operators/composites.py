@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from catenae_kafka_spark.catalog import catalog
 from catenae_kafka_spark.functions.compat import half_up
 from catenae_kafka_spark.operators.checkpointing import past_gate
+from catenae_kafka_spark.operators.graph import brand_baskets, brand_pairs
 from catenae_kafka_spark.registry import REGISTRY
 
 #: q_top_unshipped's broadcast semi-join pre-filter is gated on the
@@ -413,20 +414,6 @@ def q_pattern_negation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def brand_baskets(c) -> DataFrame:
-    """Distinct (order, brand) baskets — shared by the association-lift
-    and triangle-counting graph builders so the basket construction
-    (broadcast part dim, distinct) cannot drift between them."""
-    return (
-        c.lineitem.join(
-            F.broadcast(c.part.select("p_partkey", "p_brand")),
-            c.lineitem.l_partkey == F.col("p_partkey"),
-        )
-        .select("l_orderkey", "p_brand")
-        .distinct()
-    )
-
-
 @REGISTRY.register(
     "q_basket_lift",
     tags=("composite", "association"),
@@ -465,27 +452,19 @@ def q_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     baskets = brand_baskets(c)
     n = baskets.select(F.countDistinct("l_orderkey").alias("n_orders"))
     freq = baskets.groupBy("p_brand").agg(F.count("*").alias("f"))
-    a = baskets.select("l_orderkey", F.col("p_brand").alias("brand_a"))
-    b = baskets.select("l_orderkey", F.col("p_brand").alias("brand_b"))
-    pairs = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("brand_a") < F.col("brand_b"))
-        .groupBy("brand_a", "brand_b")
-        .agg(F.count("*").alias("n_ab"))
-        .filter(F.col("n_ab") >= 50)
-    )
-    fa = freq.select(F.col("p_brand").alias("brand_a"), F.col("f").alias("fa"))
-    fb = freq.select(F.col("p_brand").alias("brand_b"), F.col("f").alias("fb"))
+    pairs = brand_pairs(baskets).filter(F.col("w") >= 50)
+    fa = freq.select(F.col("p_brand").alias("u"), F.col("f").alias("fa"))
+    fb = freq.select(F.col("p_brand").alias("v"), F.col("f").alias("fb"))
     return (
-        pairs.join(F.broadcast(fa), "brand_a")
-        .join(F.broadcast(fb), "brand_b")
+        pairs.join(F.broadcast(fa), "u")
+        .join(F.broadcast(fb), "v")
         .crossJoin(F.broadcast(n))
         .select(
-            "brand_a",
-            "brand_b",
-            F.col("n_ab").cast("long").alias("n_ab"),
+            F.col("u").alias("brand_a"),
+            F.col("v").alias("brand_b"),
+            F.col("w").cast("long").alias("n_ab"),
             F.round(
-                F.col("n_ab") * F.col("n_orders") / (F.col("fa") * F.col("fb")), 4
+                F.col("w") * F.col("n_orders") / (F.col("fa") * F.col("fb")), 4
             ).alias("lift"),
         )
     )

@@ -1,17 +1,32 @@
-"""Graph operators: weighted PageRank via iterative joins.
+"""Graph and recommender operators over two shared graphs.
 
-Connected components (the other classic) lives with the dedup stack
-(llm_dedup.cluster_near_dups — pointer-jumping union-find). PageRank
-here completes the iterative-algorithm surface: rank refreshes are a
-fixed number of join+agg rounds, each expressible as plain DataFrame
-ops, so Catalyst/AQE optimizes every round and nothing ever leaves the
-JVM.
+- The brand co-purchase graph. ``brand_baskets`` gives the distinct
+  (order, brand) baskets; ``brand_pairs`` gives each u < v brand pair
+  with w, the number of orders that hold both. Callers keep the pairs
+  with w over a support threshold or the ``top_edges`` k heaviest, and
+  ``symmetric`` adds every edge reversed. Triangle counting, k-hop BFS,
+  common neighbours, Bellman-Ford, assortativity, k-core peeling,
+  harmonic centrality, resource allocation and the item-item
+  recommenders (``item_similarity`` then ``recommend_top1``) run on it.
+- The international trade graph. ``nation_trade_edges`` gives customer
+  nation → supplier nation shipment counts and ``undirected`` sums
+  each nation pair over both directions. PageRank, label propagation,
+  modularity and reciprocity run on it.
 
-Scale shape: the rank table is O(nodes) — joined against the
-aggregated edge table each round (edges aggregate ONCE up front, the
-per-round shuffle carries only (node, contribution) pairs). With a
-fixed iteration count the oracle is the same recurrence unrolled in
-SQL, so the driver hash-checks real numeric parity, not just shape.
+Connected components lives with the dedup stack
+(llm_dedup.cluster_near_dups — pointer-jumping union-find).
+
+Every iterative algorithm here is a fixed number of rounds of plain
+DataFrame joins and aggregations, so Catalyst/AQE optimizes every round
+and nothing leaves the JVM. Each oracle is the same recurrence unrolled
+in SQL (or a depth-bounded recursive CTE), so the driver hash-checks
+real numeric parity, not just shape. A bounded intermediate that several
+rounds reference is computed once with ``materialize``: Catalyst does
+not deduplicate a reused DataFrame subtree.
+
+The DuckDB oracles share SQL fragments (``_BASKETS``, ``_pairs_sql``,
+``_CF_SIM`` ...) with each other, never with the Spark builders, so
+each oracle stays an independent statement of its query.
 """
 
 from __future__ import annotations
@@ -25,6 +40,173 @@ from catenae_kafka_spark.registry import REGISTRY
 
 DAMPING = 0.85
 ITERATIONS = 3
+
+
+def brand_baskets(c) -> DataFrame:
+    """Distinct (l_orderkey, p_brand) baskets: the node set of the brand
+    co-purchase graph and the input of q_basket_lift and
+    q_itemset_triples, so the basket construction (broadcast part dim,
+    distinct) cannot drift between them."""
+    return (
+        c.lineitem.join(
+            F.broadcast(c.part.select("p_partkey", "p_brand")),
+            c.lineitem.l_partkey == F.col("p_partkey"),
+        )
+        .select("l_orderkey", "p_brand")
+        .distinct()
+    )
+
+
+def brand_pairs(baskets: DataFrame) -> DataFrame:
+    """(u, v, w): every brand pair u < v bought in one order, w = the
+    number of orders holding both. The pair space is bounded by the
+    per-order self-join (each basket contributes |basket|²/2 pairs,
+    never brands²). Callers apply their own support threshold on w."""
+    a = baskets.select("l_orderkey", F.col("p_brand").alias("u"))
+    b = baskets.select("l_orderkey", F.col("p_brand").alias("v"))
+    return (
+        a.join(b, "l_orderkey")
+        .filter(F.col("u") < F.col("v"))
+        .groupBy("u", "v")
+        .agg(F.count("*").alias("w"))
+    )
+
+
+def symmetric(edges: DataFrame) -> DataFrame:
+    """``edges`` plus every edge with u and v swapped; any other column
+    (a cost, a weight) is carried unchanged on both halves."""
+    flip = {"u": F.col("v").alias("u"), "v": F.col("u").alias("v")}
+    return edges.unionAll(edges.select([flip.get(c, F.col(c)) for c in edges.columns]))
+
+
+def top_edges(weighted: DataFrame, k: int) -> DataFrame:
+    """(u, v) of the k heaviest edges of ``weighted`` (u, v, w), ties
+    broken by (u, v): a deterministic sparsification whose size does
+    not grow with the data."""
+    rank = Window.orderBy(F.col("w").desc(), "u", "v")
+    return (
+        weighted.withColumn("rn", F.row_number().over(rank))
+        .filter(F.col("rn") <= k)
+        .select("u", "v")
+    )
+
+
+def degrees(sym: DataFrame) -> DataFrame:
+    """(node, d): each node's degree in the symmetric edge list."""
+    return sym.groupBy(F.col("u").alias("node")).agg(F.count("*").alias("d"))
+
+
+def wedges(sym: DataFrame) -> DataFrame:
+    """(x, a, b): both ends of every 2-path a - x - b in the symmetric
+    edge list, a == b included. The pair space is generated by the
+    keyed self-join on the shared neighbour x (each x contributes
+    deg(x)² rows), never nodes × nodes."""
+    n1 = sym.select(F.col("u").alias("x"), F.col("v").alias("a"))
+    n2 = sym.select(F.col("u").alias("x"), F.col("v").alias("b"))
+    return n1.join(n2, "x")
+
+
+def common_neighbors(sym: DataFrame, ordered: bool) -> DataFrame:
+    """Columns a, b, common, da, db: every node pair with ``common`` > 0
+    shared neighbours, and both node degrees; ``ordered`` keeps (a, b) and
+    (b, a), otherwise a < b only. Degrees are node-cardinality and
+    broadcast back."""
+    deg = degrees(sym)
+    keep = F.col("a") != F.col("b") if ordered else F.col("a") < F.col("b")
+    cn = wedges(sym).filter(keep).groupBy("a", "b").agg(F.count("*").alias("common"))
+    da = deg.select(F.col("node").alias("a"), F.col("d").alias("da"))
+    db = deg.select(F.col("node").alias("b"), F.col("d").alias("db"))
+    return cn.join(F.broadcast(da), "a").join(F.broadcast(db), "b")
+
+
+def item_similarity(sym: DataFrame) -> DataFrame:
+    """(a, b, sim_micro): neighbourhood Jaccard of every ordered item
+    pair, floored to micro-units (BIGINT, so sums of it are exact)."""
+    return common_neighbors(sym, ordered=True).select(
+        "a",
+        "b",
+        F.floor(
+            F.col("common")
+            * F.lit(1000000.0)
+            / (F.col("da") + F.col("db") - F.col("common"))
+        )
+        .cast("bigint")
+        .alias("sim_micro"),
+    )
+
+
+def owned_brands(orders: DataFrame, baskets: DataFrame) -> DataFrame:
+    """(o_custkey, p_brand): the distinct brands each customer bought in
+    ``orders``."""
+    return (
+        orders.join(baskets, orders["o_orderkey"] == baskets["l_orderkey"])
+        .select("o_custkey", "p_brand")
+        .distinct()
+    )
+
+
+def recommend_top1(owned: DataFrame, sim: DataFrame) -> DataFrame:
+    """(o_custkey, rec_brand, score_micro): each customer's best brand
+    they do not own. A candidate's score is the sum of its ``sim_micro``
+    to every brand the customer owns; ties go to the smallest brand.
+
+    The similarity table is item-cardinality and broadcast to the
+    ownership join; the not-owned exclusion is a LEFT ANTI on
+    (customer, brand); top-1 is a per-customer window, so the
+    customer-facing rows shuffle once on the customer key."""
+    cand = owned.join(
+        F.broadcast(sim.select(F.col("a").alias("p_brand"), "b", "sim_micro")),
+        "p_brand",
+    )
+    not_owned = cand.join(
+        owned.select("o_custkey", F.col("p_brand").alias("b")),
+        ["o_custkey", "b"],
+        "left_anti",
+    )
+    scores = not_owned.groupBy("o_custkey", F.col("b").alias("rec_brand")).agg(
+        F.sum("sim_micro").cast("bigint").alias("score_micro")
+    )
+    best = Window.partitionBy("o_custkey").orderBy(
+        F.col("score_micro").desc(), "rec_brand"
+    )
+    return (
+        scores.withColumn("rn", F.row_number().over(best))
+        .filter(F.col("rn") == 1)
+        .select("o_custkey", "rec_brand", "score_micro")
+    )
+
+
+def nation_trade_edges(c) -> DataFrame:
+    """(src, dst, w): the directed international trade graph, customer
+    nation → supplier nation, w = line items shipped across (BIGINT).
+    Both dimensions broadcast onto the fact join; the graph has at most
+    600 edges."""
+    cust = c.customer.select("c_custkey", "c_nationkey")
+    supp = c.supplier.select("s_suppkey", "s_nationkey")
+    return (
+        c.lineitem.select("l_orderkey", "l_suppkey")
+        .join(
+            c.orders.select("o_orderkey", "o_custkey"),
+            F.col("l_orderkey") == F.col("o_orderkey"),
+        )
+        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
+        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
+        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
+        .groupBy(
+            F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
+        )
+        .agg(F.count("*").alias("w"))
+    )
+
+
+def undirected(directed: DataFrame) -> DataFrame:
+    """(u, v, w): ``directed`` (src, dst, w) with each node pair's weight
+    summed over both directions, both orientations kept."""
+    return (
+        symmetric(directed.select(F.col("src").alias("u"), F.col("dst").alias("v"), "w"))
+        .groupBy("u", "v")
+        .agg(F.sum("w").cast("bigint").alias("w"))
+    )
 
 
 def pagerank(
@@ -42,6 +224,10 @@ def pagerank(
     ``edges`` is (src, dst, w) with w > 0. Dangling nodes (no out-edges)
     keep only the teleport share. Returns (node, rank) with rank summing
     to ~1 over non-dangling + dangling reachable nodes.
+
+    The rank table is O(nodes), joined against the aggregated edge table
+    each round: edges aggregate ONCE up front, and the per-round shuffle
+    carries only (node, contribution) pairs.
 
     The helper is generic over ``iterations``, so the rank lineage is
     TRUNCATED every ``checkpoint_every`` rounds (the connected_components
@@ -66,16 +252,10 @@ def pagerank(
     )
     if iterations > 1:
         # Reused by EVERY round: materialize once instead of embedding
-        # the edge normalization + node dedup into each round's plan.
-        # Catalyst does not common-subexpression-eliminate repeated
-        # DataFrame subtrees, so without this the edge-BUILD pipeline
-        # (a fact⋈fact join for q_pagerank) is re-planned and
-        # re-executed per reference — measured 14 lineitem scans / 69
-        # Exchanges / 0 ReusedExchange in q_pagerank's physical plan
-        # (optimization r13, guide §5: materialize reused
-        # intermediates; same discipline as connected_components).
-        # Was gated on iterations > checkpoint_every, which left the
-        # registered 3-round queries unmaterialized.
+        # the edge normalization + node dedup into each round's plan
+        # (the edge build is a fact⋈fact join for q_pagerank: measured
+        # 14 lineitem scans / 69 Exchanges / 0 ReusedExchange in its
+        # physical plan without it, optimization r13).
         norm = ckpt(norm)
         nodes = ckpt(nodes)
     n_nodes = nodes.count()  # driver scalar: node count, not data rows
@@ -107,6 +287,96 @@ def pagerank(
     return ranks
 
 
+# ---- oracle SQL fragments (DuckDB) -----------------------------------
+
+_BASKETS = """baskets AS MATERIALIZED (
+  SELECT DISTINCT l_orderkey, p_brand
+  FROM lineitem JOIN part ON l_partkey = p_partkey
+)"""
+
+
+def _pairs_sql(name: str, min_count: int | None, src: str = "baskets") -> str:
+    """The u < v brand-pair CTE over the baskets in ``src``: ``weighted``
+    carries the co-order count w, ``edges`` only the pair; pairs bought
+    together in fewer than ``min_count`` orders are dropped."""
+    w = ", CAST(COUNT(*) AS BIGINT) AS w" if name == "weighted" else ""
+    having = f" HAVING COUNT(*) >= {min_count}" if min_count else ""
+    return f"""{name} AS MATERIALIZED (
+  SELECT a.p_brand AS u, b.p_brand AS v{w}
+  FROM {src} a JOIN {src} b
+    ON a.l_orderkey = b.l_orderkey AND a.p_brand < b.p_brand
+  GROUP BY a.p_brand, b.p_brand{having}
+)"""
+
+
+def _top_sql(name: str, k: int) -> str:
+    """The k heaviest ``weighted`` edges by the (w DESC, u, v) rank."""
+    return f"""{name} AS MATERIALIZED (
+  SELECT u, v FROM (
+    SELECT u, v, ROW_NUMBER() OVER (ORDER BY w DESC, u, v) AS rn FROM weighted
+  ) WHERE rn <= {k}
+)"""
+
+
+_EDGES80 = f"{_BASKETS}, {_pairs_sql('edges', 80)}"
+_TOP40_SYM = f"""{_BASKETS}, {_pairs_sql('weighted', None)},
+{_top_sql('top_edges', 40)}, sym AS MATERIALIZED (
+  SELECT u, v FROM top_edges UNION ALL SELECT v, u FROM top_edges
+)"""
+_TOP60 = f"{_BASKETS}, {_pairs_sql('weighted', None)}, {_top_sql('edges', 60)}"
+_SYM = """sym AS MATERIALIZED (
+  SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges
+)"""
+_DEG = """deg AS MATERIALIZED (
+  SELECT u AS node, CAST(COUNT(*) AS BIGINT) AS d FROM sym GROUP BY u
+)"""
+# the item-item CF chain: similarity of ordered pairs, then the scores
+# of unowned candidates and each customer's top-1
+_CF_SIM = f"""{_SYM}, {_DEG}, cn AS MATERIALIZED (
+  SELECT n1.v AS a, n2.v AS b, CAST(COUNT(*) AS BIGINT) AS common
+  FROM sym n1 JOIN sym n2 ON n1.u = n2.u AND n1.v <> n2.v
+  GROUP BY n1.v, n2.v
+), sim AS MATERIALIZED (
+  SELECT cn.a, cn.b,
+         CAST(FLOOR(cn.common * 1000000.0 / (da.d + db.d - cn.common))
+              AS BIGINT) AS sim_micro
+  FROM cn JOIN deg da ON cn.a = da.node JOIN deg db ON cn.b = db.node
+)"""
+_OWNED = """owned AS MATERIALIZED (
+  SELECT DISTINCT o.o_custkey, bk.p_brand
+  FROM orders o JOIN baskets bk ON o.o_orderkey = bk.l_orderkey
+)"""
+_SCORES = """scores AS MATERIALIZED (
+  SELECT ow.o_custkey, s.b AS rec_brand,
+         CAST(SUM(s.sim_micro) AS BIGINT) AS score_micro
+  FROM owned ow JOIN sim s ON ow.p_brand = s.a
+  WHERE NOT EXISTS (
+    SELECT 1 FROM owned o2
+    WHERE o2.o_custkey = ow.o_custkey AND o2.p_brand = s.b
+  )
+  GROUP BY ow.o_custkey, s.b
+)"""
+_TOP1 = """top1 AS MATERIALIZED (
+  SELECT o_custkey, rec_brand FROM (
+    SELECT o_custkey, rec_brand,
+           ROW_NUMBER() OVER (PARTITION BY o_custkey
+                              ORDER BY score_micro DESC, rec_brand) AS rn
+    FROM scores
+  ) WHERE rn = 1
+)"""
+_TRADE_JOIN = """FROM lineitem
+  JOIN orders ON l_orderkey = o_orderkey
+  JOIN customer c ON o_custkey = c.c_custkey
+  JOIN supplier s ON l_suppkey = s.s_suppkey
+  WHERE c.c_nationkey <> s.s_nationkey"""
+_DIRECTED = f"""directed AS MATERIALIZED (
+  SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
+         CAST(COUNT(*) AS BIGINT) AS w
+  {_TRADE_JOIN}
+  GROUP BY src, dst
+)"""
+
+
 @REGISTRY.register(
     "q_pagerank",
     tags=("graph", "iterative"),
@@ -114,11 +384,7 @@ def pagerank(
 WITH edges AS MATERIALIZED (
   SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
          COUNT(*) * 1.0 AS w
-  FROM lineitem
-  JOIN orders   ON l_orderkey = o_orderkey
-  JOIN customer c ON o_custkey = c.c_custkey
-  JOIN supplier s ON l_suppkey = s.s_suppkey
-  WHERE c.c_nationkey <> s.s_nationkey
+  {_TRADE_JOIN}
   GROUP BY c.c_nationkey, s.s_nationkey
 ), outw AS MATERIALIZED (
   SELECT src, SUM(w) AS ow FROM edges GROUP BY src
@@ -168,39 +434,16 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate once from the fact table, each round's shuffle carries
     only (node, contribution) pairs. The oracle is the identical
     recurrence unrolled in SQL — real numeric parity at 8dp."""
-    c = catalog(spark, sf_dir)
-    cust = c.customer.select("c_custkey", "c_nationkey")
-    supp = c.supplier.select("s_suppkey", "s_nationkey")
-    edges = (
-        c.lineitem.select("l_orderkey", "l_suppkey")
-        .join(c.orders.select("o_orderkey", "o_custkey"),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(
-            F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
-        )
-        .agg(F.count("*").cast("double").alias("w"))
-    )
-    ranks = pagerank(edges)
+    edges = nation_trade_edges(catalog(spark, sf_dir))
+    ranks = pagerank(edges.withColumn("w", F.col("w").cast("double")))
     return ranks.select("node", F.round("rank", 8).alias("rank"))
 
 
 @REGISTRY.register(
     "q_triangle_count",
     tags=("graph",),
-    oracle="""
-WITH baskets AS MATERIALIZED (
-  SELECT DISTINCT l_orderkey, p_brand
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-), edges AS MATERIALIZED (
-  SELECT a.p_brand AS u, b.p_brand AS v
-  FROM baskets a JOIN baskets b
-    ON a.l_orderkey = b.l_orderkey AND a.p_brand < b.p_brand
-  GROUP BY a.p_brand, b.p_brand
-  HAVING COUNT(*) >= 80
-)
+    oracle=f"""
+WITH {_EDGES80}
 SELECT CAST((SELECT COUNT(*) FROM edges) AS BIGINT) AS n_edges,
        CAST((
          SELECT COUNT(*)
@@ -218,18 +461,9 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard refinement orders by degree so high-degree hubs never
     anchor the 2-path explosion, and the closure join stays an
     equi-join on (u, v) pairs — never a cartesian."""
-    from catenae_kafka_spark.operators.composites import brand_baskets
-
-    c = catalog(spark, sf_dir)
-    baskets = brand_baskets(c)
-    a = baskets.select("l_orderkey", F.col("p_brand").alias("u"))
-    b = baskets.select("l_orderkey", F.col("p_brand").alias("v"))
     edges = materialize(
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= 80)
+        brand_pairs(brand_baskets(catalog(spark, sf_dir)))
+        .filter(F.col("w") >= 80)
         .select("u", "v")
     )
     e1 = edges
@@ -249,23 +483,8 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 @REGISTRY.register(
     "q_bfs_khop",
     tags=("graph",),
-    oracle="""
-WITH RECURSIVE baskets AS MATERIALIZED (
-  SELECT DISTINCT l_orderkey, p_brand
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-), weighted AS MATERIALIZED (
-  SELECT a.p_brand AS u, b.p_brand AS v, CAST(COUNT(*) AS BIGINT) AS w
-  FROM baskets a JOIN baskets b
-    ON a.l_orderkey = b.l_orderkey AND a.p_brand < b.p_brand
-  GROUP BY a.p_brand, b.p_brand
-), top_edges AS MATERIALIZED (
-  SELECT u, v FROM (
-    SELECT u, v, ROW_NUMBER() OVER (ORDER BY w DESC, u, v) AS rn
-    FROM weighted
-  ) WHERE rn <= 40
-), sym AS MATERIALIZED (
-  SELECT u, v FROM top_edges UNION ALL SELECT v, u FROM top_edges
-), seed AS MATERIALIZED (
+    oracle=f"""
+WITH RECURSIVE {_TOP40_SYM}, seed AS MATERIALIZED (
   SELECT u AS node FROM (
     SELECT u, ROW_NUMBER() OVER (ORDER BY w DESC, u, v) AS rn
     FROM weighted
@@ -301,40 +520,16 @@ def q_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     (weight, u, v) rank, so sparsity is data-size-independent. The
     oracle is the identical walk as a depth-bounded recursive CTE.
     """
-    from catenae_kafka_spark.operators.composites import brand_baskets
-
-    c = catalog(spark, sf_dir)
-    baskets = brand_baskets(c)
-    a = baskets.select("l_orderkey", F.col("p_brand").alias("u"))
-    b = baskets.select("l_orderkey", F.col("p_brand").alias("v"))
     # weighted is brand-pair bounded (~C(25,2) rows) and referenced by
-    # BOTH the top-edges and seed windows (and transitively by every
-    # frontier round) — materialize it once so the basket-build
-    # pipeline isn't re-planned/re-executed per reference (optimization
-    # r13, guide §5; Catalyst does not CSE repeated DataFrame subtrees:
-    # measured 20 lineitem scans / 79 Exchanges in this query's plan).
-    weighted = materialize(
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("w"))
-    )
-    w_rank = Window.orderBy(F.col("w").desc(), "u", "v")
-    top_edges = (
-        weighted.withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= 40)
-        .select("u", "v")
-    )
-    sym = top_edges.unionByName(
-        top_edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).cache()
-
-    seed = (
-        weighted.withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") == 1)
-        .select(F.col("u").alias("node"), F.lit(0).alias("d"))
-    )
-    dist = seed
+    # both the top-edges and seed windows (and transitively by every
+    # frontier round) — materialize it once (measured 20 lineitem scans
+    # / 79 Exchanges in this query's plan without it, optimization r13)
+    weighted = materialize(brand_pairs(brand_baskets(catalog(spark, sf_dir))))
+    # both frontier rounds read sym: materialized, it beat recomputing
+    # the top-40 window per read (interleaved A/B at sf0.01, 9 reps:
+    # median 1.55 s vs 1.81 s)
+    sym = materialize(symmetric(top_edges(weighted, 40)))
+    dist = top_edges(weighted, 1).select(F.col("u").alias("node"), F.lit(0).alias("d"))
     frontier = dist
     for depth in (1, 2):
         neighbors = (
@@ -355,21 +550,8 @@ def q_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
 @REGISTRY.register(
     "q_graph_common_neighbors",
     tags=("graph",),
-    oracle="""
-WITH baskets AS MATERIALIZED (
-  SELECT DISTINCT l_orderkey, p_brand
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-), edges AS MATERIALIZED (
-  SELECT a.p_brand AS u, b.p_brand AS v
-  FROM baskets a JOIN baskets b
-    ON a.l_orderkey = b.l_orderkey AND a.p_brand < b.p_brand
-  GROUP BY a.p_brand, b.p_brand
-  HAVING COUNT(*) >= 80
-), sym AS MATERIALIZED (
-  SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges
-), deg AS MATERIALIZED (
-  SELECT u AS node, CAST(COUNT(*) AS BIGINT) AS d FROM sym GROUP BY u
-), cn AS MATERIALIZED (
+    oracle=f"""
+WITH {_EDGES80}, {_SYM}, {_DEG}, cn AS MATERIALIZED (
   SELECT n1.v AS a, n2.v AS b, CAST(COUNT(*) AS BIGINT) AS common
   FROM sym n1 JOIN sym n2 ON n1.u = n2.u AND n1.v < n2.v
   GROUP BY n1.v, n2.v
@@ -390,62 +572,26 @@ def q_graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     hub-cap refinement (drop or sample neighbors above a degree
     ceiling before the self-join) bounds the quadratic term exactly
     like the basket-size bound in q_basket_lift."""
-    from catenae_kafka_spark.operators.composites import brand_baskets
-
-    c = catalog(spark, sf_dir)
-    baskets = brand_baskets(c)
-    a = baskets.select("l_orderkey", F.col("p_brand").alias("u"))
-    b = baskets.select("l_orderkey", F.col("p_brand").alias("v"))
-    edges = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= 80)
+    sym = materialize(symmetric(
+        brand_pairs(brand_baskets(catalog(spark, sf_dir)))
+        .filter(F.col("w") >= 80)
         .select("u", "v")
-    )
-    sym = materialize(
-        edges.unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    )
-    deg = sym.groupBy(F.col("u").alias("node")).agg(F.count("*").alias("d"))
-    n1 = sym.select(F.col("u").alias("x"), F.col("v").alias("a"))
-    n2 = sym.select(F.col("u").alias("x"), F.col("v").alias("b"))
-    cn = (
-        n1.join(n2, "x")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("common"))
-    )
-    da = deg.select(F.col("node").alias("a"), F.col("d").alias("da"))
-    db = deg.select(F.col("node").alias("b"), F.col("d").alias("db"))
-    return (
-        cn.join(F.broadcast(da), "a")
-        .join(F.broadcast(db), "b")
-        .select(
-            "a",
-            "b",
-            "common",
-            F.round(
-                F.col("common") / (F.col("da") + F.col("db") - F.col("common")), 6
-            ).alias("nb_jaccard"),
-        )
+    ))
+    return common_neighbors(sym, ordered=False).select(
+        "a",
+        "b",
+        "common",
+        F.round(
+            F.col("common") / (F.col("da") + F.col("db") - F.col("common")), 6
+        ).alias("nb_jaccard"),
     )
 
 
 @REGISTRY.register(
     "q_shortest_path_bf",
     tags=("graph",),
-    oracle="""
-WITH baskets AS MATERIALIZED (
-  SELECT DISTINCT l_orderkey, p_brand
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-), weighted AS MATERIALIZED (
-  SELECT a.p_brand AS u, b.p_brand AS v, CAST(COUNT(*) AS BIGINT) AS w
-  FROM baskets a JOIN baskets b
-    ON a.l_orderkey = b.l_orderkey AND a.p_brand < b.p_brand
-  GROUP BY a.p_brand, b.p_brand
-  HAVING COUNT(*) >= 80
-), sym AS MATERIALIZED (
+    oracle=f"""
+WITH {_BASKETS}, {_pairs_sql('weighted', 80)}, sym AS MATERIALIZED (
   SELECT u, v, CAST(FLOOR(1000000.0 / w) AS BIGINT) AS cost FROM weighted
   UNION ALL
   SELECT v AS u, u AS v, CAST(FLOOR(1000000.0 / w) AS BIGINT) AS cost FROM weighted
@@ -480,29 +626,17 @@ def q_shortest_path_bf(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation on the destination node. k rounds = k bounded
     broadcast-join + agg stages, never an unbounded transitive
     closure; unreached nodes simply stay absent."""
-    from catenae_kafka_spark.operators.composites import brand_baskets
-
-    c = catalog(spark, sf_dir)
-    baskets = brand_baskets(c)
-    a = baskets.select("l_orderkey", F.col("p_brand").alias("u"))
-    b = baskets.select("l_orderkey", F.col("p_brand").alias("v"))
     # brand-pair bounded; referenced by sym (both union sides) and the
-    # seed — materialize once (optimization r13, guide §5: measured 60
-    # lineitem scans / 236 Exchanges in this query's plan without it)
+    # seed — materialize once (measured 60 lineitem scans / 236
+    # Exchanges in this query's plan without it, optimization r13)
     weighted = materialize(
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= 80)
+        brand_pairs(brand_baskets(catalog(spark, sf_dir))).filter(F.col("w") >= 80)
     )
     cost = F.floor(F.lit(1000000.0) / F.col("w")).cast("bigint")
-    sym = weighted.select("u", "v", cost.alias("cost")).unionAll(
-        weighted.select(
-            F.col("v").alias("u"), F.col("u").alias("v"), cost.alias("cost")
-        )
-    )
-    sym = sym.cache()  # reused by all 3 relaxation rounds
+    # sym is a projection of the materialized weighted: re-reading it
+    # per round costs no more than materializing it (interleaved A/B at
+    # sf0.01, 9 reps: median 1.98 s vs 2.04 s)
+    sym = symmetric(weighted.select("u", "v", cost.alias("cost")))
     seed = sym.agg(F.min("u").alias("node")).select(
         "node", F.lit(0).cast("bigint").alias("d")
     )
@@ -526,42 +660,8 @@ def q_shortest_path_bf(spark: SparkSession, sf_dir: str) -> DataFrame:
 @REGISTRY.register(
     "q_collab_filter",
     tags=("graph", "recommender"),
-    oracle="""
-WITH baskets AS MATERIALIZED (
-  SELECT DISTINCT l_orderkey, p_brand
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-), edges AS MATERIALIZED (
-  SELECT a.p_brand AS u, b.p_brand AS v
-  FROM baskets a JOIN baskets b
-    ON a.l_orderkey = b.l_orderkey AND a.p_brand < b.p_brand
-  GROUP BY a.p_brand, b.p_brand
-  HAVING COUNT(*) >= 80
-), sym AS MATERIALIZED (
-  SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges
-), deg AS MATERIALIZED (
-  SELECT u AS node, CAST(COUNT(*) AS BIGINT) AS d FROM sym GROUP BY u
-), cn AS MATERIALIZED (
-  SELECT n1.v AS a, n2.v AS b, CAST(COUNT(*) AS BIGINT) AS common
-  FROM sym n1 JOIN sym n2 ON n1.u = n2.u AND n1.v <> n2.v
-  GROUP BY n1.v, n2.v
-), sim AS MATERIALIZED (
-  SELECT cn.a, cn.b,
-         CAST(FLOOR(cn.common * 1000000.0 / (da.d + db.d - cn.common))
-              AS BIGINT) AS sim_micro
-  FROM cn JOIN deg da ON cn.a = da.node JOIN deg db ON cn.b = db.node
-), owned AS MATERIALIZED (
-  SELECT DISTINCT o.o_custkey, bk.p_brand
-  FROM orders o JOIN baskets bk ON o.o_orderkey = bk.l_orderkey
-), scores AS MATERIALIZED (
-  SELECT ow.o_custkey, s.b AS rec_brand,
-         CAST(SUM(s.sim_micro) AS BIGINT) AS score_micro
-  FROM owned ow JOIN sim s ON ow.p_brand = s.a
-  WHERE NOT EXISTS (
-    SELECT 1 FROM owned o2
-    WHERE o2.o_custkey = ow.o_custkey AND o2.p_brand = s.b
-  )
-  GROUP BY ow.o_custkey, s.b
-)
+    oracle=f"""
+WITH {_EDGES80}, {_CF_SIM}, {_OWNED}, {_SCORES}
 SELECT o_custkey, rec_brand, score_micro FROM (
   SELECT o_custkey, rec_brand, score_micro,
          ROW_NUMBER() OVER (PARTITION BY o_custkey
@@ -583,100 +683,22 @@ def q_collab_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     the not-owned exclusion is a LEFT ANTI on (customer, brand); top-1
     is a per-customer window over candidate-cardinality rows. The
     user-facing fact table shuffles once on the customer key."""
-    from catenae_kafka_spark.operators.composites import brand_baskets
-
     c = catalog(spark, sf_dir)
     baskets = brand_baskets(c)
-    a = baskets.select("l_orderkey", F.col("p_brand").alias("u"))
-    b = baskets.select("l_orderkey", F.col("p_brand").alias("v"))
-    edges = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= 80)
-        .select("u", "v")
-    )
     sym = materialize(
-        edges.unionAll(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-    )
-    deg = sym.groupBy(F.col("u").alias("node")).agg(F.count("*").alias("d"))
-    n1 = sym.select(F.col("u").alias("x"), F.col("v").alias("a"))
-    n2 = sym.select(F.col("u").alias("x"), F.col("v").alias("b"))
-    cn = (
-        n1.join(n2, "x")
-        .filter(F.col("a") != F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("common"))
-    )
-    sim = (
-        cn.join(F.broadcast(deg.select(F.col("node").alias("a"), F.col("d").alias("da"))), "a")
-        .join(F.broadcast(deg.select(F.col("node").alias("b"), F.col("d").alias("db"))), "b")
-        .select(
-            "a",
-            "b",
-            F.floor(
-                F.col("common")
-                * F.lit(1000000.0)
-                / (F.col("da") + F.col("db") - F.col("common"))
-            )
-            .cast("bigint")
-            .alias("sim_micro"),
-        )
+        symmetric(brand_pairs(baskets).filter(F.col("w") >= 80).select("u", "v"))
     )
     owned = materialize(
-        c.orders.select("o_custkey", "o_orderkey")
-        .join(baskets, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select("o_custkey", "p_brand")
-        .distinct()
+        owned_brands(c.orders.select("o_custkey", "o_orderkey"), baskets)
     )
-    cand = owned.join(
-        F.broadcast(sim.select(F.col("a").alias("p_brand"), "b", "sim_micro")),
-        "p_brand",
-    )
-    not_owned = cand.join(
-        owned.select(
-            F.col("o_custkey"), F.col("p_brand").alias("b")
-        ),
-        ["o_custkey", "b"],
-        "left_anti",
-    )
-    scores = not_owned.groupBy("o_custkey", F.col("b").alias("rec_brand")).agg(
-        F.sum("sim_micro").cast("bigint").alias("score_micro")
-    )
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("score_micro").desc(), "rec_brand"
-    )
-    return (
-        scores.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("o_custkey", "rec_brand", "score_micro")
-    )
+    return recommend_top1(owned, item_similarity(sym))
 
 
 @REGISTRY.register(
     "q_graph_assortativity",
     tags=("graph",),
-    oracle="""
-WITH baskets AS MATERIALIZED (
-  SELECT DISTINCT l_orderkey, p_brand
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-), weighted AS MATERIALIZED (
-  SELECT a.p_brand AS u, b.p_brand AS v, CAST(COUNT(*) AS BIGINT) AS w
-  FROM baskets a JOIN baskets b
-    ON a.l_orderkey = b.l_orderkey AND a.p_brand < b.p_brand
-  GROUP BY a.p_brand, b.p_brand
-), edges AS MATERIALIZED (
-  SELECT u, v FROM (
-    SELECT u, v, ROW_NUMBER() OVER (ORDER BY w DESC, u, v) AS rn FROM weighted
-  ) WHERE rn <= 60
-), sym AS MATERIALIZED (
-  SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges
-), deg AS MATERIALIZED (
-  SELECT u AS node, CAST(COUNT(*) AS BIGINT) AS d FROM sym GROUP BY u
-), xy AS MATERIALIZED (
+    oracle=f"""
+WITH {_TOP60}, {_SYM}, {_DEG}, xy AS MATERIALIZED (
   SELECT du.d AS x, dv.d AS y
   FROM sym JOIN deg du ON sym.u = du.node JOIN deg dv ON sym.v = dv.node
 ), s AS MATERIALIZED (
@@ -710,38 +732,13 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation after two broadcast degree joins), so the correlation
     is a deterministic function of exact integers — same discipline
     as q_acf_daily; emitted floored to micro-units."""
-    from catenae_kafka_spark.operators.composites import brand_baskets
-
-    c = catalog(spark, sf_dir)
-    baskets = brand_baskets(c)
-    a = baskets.select("l_orderkey", F.col("p_brand").alias("u"))
-    b = baskets.select("l_orderkey", F.col("p_brand").alias("v"))
-    weighted = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("w"))
-    )
-    # top-60 strongest edges (the q_bfs_khop construction): the >=80
-    # threshold yields the COMPLETE K25 graph on these fixtures, whose
-    # degree variance is zero - assortativity needs degree spread
-    edges = (
-        weighted.select(
-            "u",
-            "v",
-            F.row_number()
-            .over(Window.orderBy(F.col("w").desc(), "u", "v"))
-            .alias("rn"),
-        )
-        .filter(F.col("rn") <= 60)
-        .select("u", "v")
-    )
+    # top-60 strongest edges: the >=80 threshold yields the COMPLETE
+    # K25 graph on these fixtures, whose degree variance is zero -
+    # assortativity needs degree spread
     sym = materialize(
-        edges.unionAll(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
+        symmetric(top_edges(brand_pairs(brand_baskets(catalog(spark, sf_dir))), 60))
     )
-    deg = sym.groupBy(F.col("u").alias("node")).agg(F.count("*").alias("d"))
+    deg = degrees(sym)
     xy = (
         sym.join(
             F.broadcast(deg.select(F.col("node").alias("u"), F.col("d").alias("x"))),
@@ -784,20 +781,8 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @REGISTRY.register(
     "q_kcore_peel",
     tags=("graph",),
-    oracle="""
-WITH baskets AS MATERIALIZED (
-  SELECT DISTINCT l_orderkey, p_brand
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-), weighted AS MATERIALIZED (
-  SELECT a.p_brand AS u, b.p_brand AS v, CAST(COUNT(*) AS BIGINT) AS w
-  FROM baskets a JOIN baskets b
-    ON a.l_orderkey = b.l_orderkey AND a.p_brand < b.p_brand
-  GROUP BY a.p_brand, b.p_brand
-), edges AS MATERIALIZED (
-  SELECT u, v FROM (
-    SELECT u, v, ROW_NUMBER() OVER (ORDER BY w DESC, u, v) AS rn FROM weighted
-  ) WHERE rn <= 60
-), sym0 AS MATERIALIZED (
+    oracle=f"""
+WITH {_TOP60}, sym0 AS MATERIALIZED (
   SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges
 ), keep1 AS MATERIALIZED (
   SELECT u FROM sym0 GROUP BY u HAVING COUNT(*) >= 4
@@ -828,40 +813,13 @@ def q_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     two BROADCAST semi-joins of the surviving-node list against the
     edge table — the q_pagerank iteration discipline; k rounds = k
     bounded stages, and the edge table only ever shrinks."""
-    from catenae_kafka_spark.operators.composites import brand_baskets
-
-    c = catalog(spark, sf_dir)
-    baskets = brand_baskets(c)
-    a = baskets.select("l_orderkey", F.col("p_brand").alias("u"))
-    b = baskets.select("l_orderkey", F.col("p_brand").alias("v"))
-    weighted = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("w"))
-    )
-    edges = (
-        weighted.select(
-            "u",
-            "v",
-            F.row_number()
-            .over(Window.orderBy(F.col("w").desc(), "u", "v"))
-            .alias("rn"),
-        )
-        .filter(F.col("rn") <= 60)
-        .select("u", "v")
-    )
     # Materialize the (<=120-row) symmetrized edge list ONCE before the
-    # peel loop (optimization r13, guide §5): each peel round's plan
-    # embeds the previous round's, and Catalyst does not CSE repeated
-    # DataFrame subtrees, so the basket-build pipeline was duplicated
-    # near-exponentially — measured 100 lineitem scans / 374 Exchanges
-    # / 0 ReusedExchange in this query's physical plan (identical rows
-    # after; rung numbers in OPTIMIZATION_r13.md).
+    # peel loop: each peel round's plan embeds the previous round's, so
+    # the basket-build pipeline was duplicated near-exponentially —
+    # measured 100 lineitem scans / 374 Exchanges / 0 ReusedExchange in
+    # this query's physical plan (rung numbers in OPTIMIZATION_r13.md).
     sym = materialize(
-        edges.unionAll(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
+        symmetric(top_edges(brand_pairs(brand_baskets(catalog(spark, sf_dir))), 60))
     )
     k = 4
     for rnd in range(3):
@@ -883,14 +841,10 @@ _LPA_ROUNDS = 2
 @REGISTRY.register(
     "q_label_propagation",
     tags=("graph", "iterative"),
-    oracle="""
+    oracle=f"""
 WITH directed AS MATERIALIZED (
   SELECT c.c_nationkey AS src, s.s_nationkey AS dst, COUNT(*) AS w
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer c ON o_custkey = c.c_custkey
-  JOIN supplier s ON l_suppkey = s.s_suppkey
-  WHERE c.c_nationkey <> s.s_nationkey
+  {_TRADE_JOIN}
   GROUP BY c.c_nationkey, s.s_nationkey
 ), edges AS MATERIALIZED (
   SELECT u, v, CAST(SUM(w) AS BIGINT) AS w FROM (
@@ -939,37 +893,11 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle carries only (node, label, weight) triples — the same
     bounded-rounds discipline as pagerank/k-core/Bellman-Ford here.
     """
-    c = catalog(spark, sf_dir)
-    cust = c.customer.select("c_custkey", "c_nationkey")
-    supp = c.supplier.select("s_suppkey", "s_nationkey")
-    directed = (
-        c.lineitem.select("l_orderkey", "l_suppkey")
-        .join(
-            c.orders.select("o_orderkey", "o_custkey"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(
-            F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
-        )
-        .agg(F.count("*").alias("w"))
-    )
     # nation-pair bounded (<=600 rows); referenced by every LPA round
-    # plus the label init — materialize once (optimization r13, guide
-    # §5: measured 6 lineitem scans / 32 Exchanges in this query's
-    # plan without it; the edge build is a fact⋈fact join)
-    edges = materialize(
-        directed.select(F.col("src").alias("u"), F.col("dst").alias("v"), "w")
-        .unionAll(
-            directed.select(
-                F.col("dst").alias("u"), F.col("src").alias("v"), "w"
-            )
-        )
-        .groupBy("u", "v")
-        .agg(F.sum("w").cast("bigint").alias("w"))
-    )
+    # plus the label init — materialize once (measured 6 lineitem scans
+    # / 32 Exchanges in this query's plan without it, optimization r13;
+    # the edge build is a fact⋈fact join)
+    edges = materialize(undirected(nation_trade_edges(catalog(spark, sf_dir))))
     labels = edges.select(F.col("u").alias("node")).distinct().withColumn(
         "label", F.col("node")
     )
@@ -991,11 +919,8 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 @REGISTRY.register(
     "q_rec_precision",
     tags=("graph", "recommender", "evaluation"),
-    oracle="""
-WITH baskets AS MATERIALIZED (
-  SELECT DISTINCT l_orderkey, p_brand
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-), train_o AS MATERIALIZED (
+    oracle=f"""
+WITH {_BASKETS}, train_o AS MATERIALIZED (
   SELECT o_orderkey, o_custkey FROM orders
   WHERE o_orderdate < TIMESTAMP '1999-01-01'
 ), test_o AS MATERIALIZED (
@@ -1004,43 +929,10 @@ WITH baskets AS MATERIALIZED (
 ), tb AS MATERIALIZED (
   SELECT b.l_orderkey, b.p_brand FROM baskets b
   JOIN train_o t ON b.l_orderkey = t.o_orderkey
-), edges AS MATERIALIZED (
-  SELECT a.p_brand AS u, b.p_brand AS v
-  FROM tb a JOIN tb b ON a.l_orderkey = b.l_orderkey AND a.p_brand < b.p_brand
-  GROUP BY a.p_brand, b.p_brand HAVING COUNT(*) >= 50
-), sym AS MATERIALIZED (
-  SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges
-), deg AS MATERIALIZED (
-  SELECT u AS node, CAST(COUNT(*) AS BIGINT) AS d FROM sym GROUP BY u
-), cn AS MATERIALIZED (
-  SELECT n1.v AS a, n2.v AS b, CAST(COUNT(*) AS BIGINT) AS common
-  FROM sym n1 JOIN sym n2 ON n1.u = n2.u AND n1.v <> n2.v
-  GROUP BY n1.v, n2.v
-), sim AS MATERIALIZED (
-  SELECT cn.a, cn.b,
-         CAST(FLOOR(cn.common * 1000000.0 / (da.d + db.d - cn.common))
-              AS BIGINT) AS sim_micro
-  FROM cn JOIN deg da ON cn.a = da.node JOIN deg db ON cn.b = db.node
-), owned AS MATERIALIZED (
+), {_pairs_sql('edges', 50, src='tb')}, {_CF_SIM}, owned AS MATERIALIZED (
   SELECT DISTINCT t.o_custkey, b.p_brand
   FROM train_o t JOIN baskets b ON t.o_orderkey = b.l_orderkey
-), scores AS MATERIALIZED (
-  SELECT ow.o_custkey, s.b AS rec_brand,
-         CAST(SUM(s.sim_micro) AS BIGINT) AS score_micro
-  FROM owned ow JOIN sim s ON ow.p_brand = s.a
-  WHERE NOT EXISTS (
-    SELECT 1 FROM owned o2
-    WHERE o2.o_custkey = ow.o_custkey AND o2.p_brand = s.b
-  )
-  GROUP BY ow.o_custkey, s.b
-), top1 AS MATERIALIZED (
-  SELECT o_custkey, rec_brand FROM (
-    SELECT o_custkey, rec_brand,
-           ROW_NUMBER() OVER (PARTITION BY o_custkey
-                              ORDER BY score_micro DESC, rec_brand) AS rn
-    FROM scores
-  ) WHERE rn = 1
-), test_owned AS MATERIALIZED (
+), {_SCORES}, {_TOP1}, test_owned AS MATERIALIZED (
   SELECT DISTINCT t.o_custkey, b.p_brand
   FROM test_o t JOIN baskets b ON t.o_orderkey = b.l_orderkey
 )
@@ -1069,8 +961,6 @@ def q_rec_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     table broadcast, one customer-keyed shuffle) plus one broadcast
     hash join of the top-1 table against test ownership; the final
     metric is a 3-column global agg."""
-    from catenae_kafka_spark.operators.composites import brand_baskets
-
     c = catalog(spark, sf_dir)
     baskets = brand_baskets(c)
     split = F.lit("1999-01-01").cast("timestamp")
@@ -1084,78 +974,11 @@ def q_rec_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_o.select("o_orderkey"),
         baskets["l_orderkey"] == F.col("o_orderkey"),
     ).select("l_orderkey", "p_brand")
-    a = tb.select("l_orderkey", F.col("p_brand").alias("u"))
-    b = tb.select("l_orderkey", F.col("p_brand").alias("v"))
-    edges = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= 50)
-        .select("u", "v")
-    )
     sym = materialize(
-        edges.unionAll(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
+        symmetric(brand_pairs(tb).filter(F.col("w") >= 50).select("u", "v"))
     )
-    deg = sym.groupBy(F.col("u").alias("node")).agg(F.count("*").alias("d"))
-    n1 = sym.select(F.col("u").alias("x"), F.col("v").alias("a"))
-    n2 = sym.select(F.col("u").alias("x"), F.col("v").alias("b"))
-    cn = (
-        n1.join(n2, "x")
-        .filter(F.col("a") != F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("common"))
-    )
-    sim = (
-        cn.join(
-            F.broadcast(deg.select(F.col("node").alias("a"), F.col("d").alias("da"))),
-            "a",
-        )
-        .join(
-            F.broadcast(deg.select(F.col("node").alias("b"), F.col("d").alias("db"))),
-            "b",
-        )
-        .select(
-            "a",
-            "b",
-            F.floor(
-                F.col("common")
-                * F.lit(1000000.0)
-                / (F.col("da") + F.col("db") - F.col("common"))
-            )
-            .cast("bigint")
-            .alias("sim_micro"),
-        )
-    )
-    owned = materialize(
-        train_o.join(baskets, train_o["o_orderkey"] == baskets["l_orderkey"])
-        .select("o_custkey", "p_brand")
-        .distinct()
-    )
-    cand = owned.join(
-        F.broadcast(sim.select(F.col("a").alias("p_brand"), "b", "sim_micro")),
-        "p_brand",
-    )
-    not_owned = cand.join(
-        owned.select(
-            F.col("o_custkey").alias("ck2"), F.col("p_brand").alias("b2")
-        ),
-        (F.col("o_custkey") == F.col("ck2")) & (F.col("b") == F.col("b2")),
-        "left_anti",
-    )
-    scores = not_owned.groupBy("o_custkey", F.col("b").alias("rec_brand")).agg(
-        F.sum("sim_micro").cast("bigint").alias("score_micro")
-    )
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("score_micro").desc(), F.col("rec_brand")
-    )
-    top1 = (
-        scores.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("o_custkey", "rec_brand")
-    )
+    owned = materialize(owned_brands(train_o, baskets))
+    top1 = recommend_top1(owned, item_similarity(sym))
     test_owned = (
         test_o.join(baskets, test_o["o_orderkey"] == baskets["l_orderkey"])
         .select(F.col("o_custkey").alias("tck"), F.col("p_brand").alias("tb"))
@@ -1182,17 +1005,8 @@ def q_rec_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
 @REGISTRY.register(
     "q_graph_modularity",
     tags=("graph",),
-    oracle="""
-WITH directed AS MATERIALIZED (
-  SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
-         CAST(COUNT(*) AS BIGINT) AS w
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer c ON o_custkey = c.c_custkey
-  JOIN supplier s ON l_suppkey = s.s_suppkey
-  WHERE c.c_nationkey <> s.s_nationkey
-  GROUP BY src, dst
-), sym AS MATERIALIZED (
+    oracle=f"""
+WITH {_DIRECTED}, sym AS MATERIALIZED (
   SELECT u, v, CAST(SUM(w) AS BIGINT) AS w FROM (
     SELECT src AS u, dst AS v, w FROM directed
     UNION ALL SELECT dst, src, w FROM directed
@@ -1239,30 +1053,7 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast dims); everything after runs on the <=625-edge nation
     graph with the 25-row community map broadcast twice."""
     c0 = catalog(spark, sf_dir)
-    cust = c0.customer.select("c_custkey", "c_nationkey")
-    supp = c0.supplier.select("s_suppkey", "s_nationkey")
-    directed = (
-        c0.lineitem.select("l_orderkey", "l_suppkey")
-        .join(
-            c0.orders.select("o_orderkey", "o_custkey"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(
-            F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
-        )
-        .agg(F.count("*").cast("bigint").alias("w"))
-    )
-    sym = materialize(
-        directed.select(F.col("src").alias("u"), F.col("dst").alias("v"), "w")
-        .unionAll(
-            directed.select(F.col("dst").alias("u"), F.col("src").alias("v"), "w")
-        )
-        .groupBy("u", "v")
-        .agg(F.sum("w").cast("bigint").alias("w"))
-    )
+    sym = materialize(undirected(nation_trade_edges(c0)))
     comm = c0.nation.select(
         F.col("n_nationkey").alias("node"), F.col("n_regionkey").alias("c")
     )
@@ -1302,48 +1093,8 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @REGISTRY.register(
     "q_rec_coverage",
     tags=("graph", "recommender", "evaluation"),
-    oracle="""
-WITH baskets AS MATERIALIZED (
-  SELECT DISTINCT l_orderkey, p_brand
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-), edges AS MATERIALIZED (
-  SELECT a.p_brand AS u, b.p_brand AS v
-  FROM baskets a JOIN baskets b
-    ON a.l_orderkey = b.l_orderkey AND a.p_brand < b.p_brand
-  GROUP BY a.p_brand, b.p_brand HAVING COUNT(*) >= 80
-), sym AS MATERIALIZED (
-  SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges
-), deg AS MATERIALIZED (
-  SELECT u AS node, CAST(COUNT(*) AS BIGINT) AS d FROM sym GROUP BY u
-), cn AS MATERIALIZED (
-  SELECT n1.v AS a, n2.v AS b, CAST(COUNT(*) AS BIGINT) AS common
-  FROM sym n1 JOIN sym n2 ON n1.u = n2.u AND n1.v <> n2.v
-  GROUP BY n1.v, n2.v
-), sim AS MATERIALIZED (
-  SELECT cn.a, cn.b,
-         CAST(FLOOR(cn.common * 1000000.0 / (da.d + db.d - cn.common))
-              AS BIGINT) AS sim_micro
-  FROM cn JOIN deg da ON cn.a = da.node JOIN deg db ON cn.b = db.node
-), owned AS MATERIALIZED (
-  SELECT DISTINCT o.o_custkey, bk.p_brand
-  FROM orders o JOIN baskets bk ON o.o_orderkey = bk.l_orderkey
-), scores AS MATERIALIZED (
-  SELECT ow.o_custkey, s.b AS rec_brand,
-         CAST(SUM(s.sim_micro) AS BIGINT) AS score_micro
-  FROM owned ow JOIN sim s ON ow.p_brand = s.a
-  WHERE NOT EXISTS (
-    SELECT 1 FROM owned o2
-    WHERE o2.o_custkey = ow.o_custkey AND o2.p_brand = s.b
-  )
-  GROUP BY ow.o_custkey, s.b
-), top1 AS MATERIALIZED (
-  SELECT o_custkey, rec_brand FROM (
-    SELECT o_custkey, rec_brand,
-           ROW_NUMBER() OVER (PARTITION BY o_custkey
-                              ORDER BY score_micro DESC, rec_brand) AS rn
-    FROM scores
-  ) WHERE rn = 1
-)
+    oracle=f"""
+WITH {_EDGES80}, {_CF_SIM}, {_OWNED}, {_SCORES}, {_TOP1}
 SELECT CAST((SELECT COUNT(DISTINCT o_custkey) FROM owned) AS BIGINT)
          AS n_users_with_history,
        CAST((SELECT COUNT(*) FROM top1) AS BIGINT) AS n_users_with_rec,
@@ -1374,77 +1125,15 @@ def q_rec_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to q_collab_filter plus four tiny distinct
     aggregates."""
-    from catenae_kafka_spark.operators.composites import brand_baskets
-
     c = catalog(spark, sf_dir)
     baskets = brand_baskets(c)
-    a = baskets.select("l_orderkey", F.col("p_brand").alias("u"))
-    b = baskets.select("l_orderkey", F.col("p_brand").alias("v"))
-    edges = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= 80)
-        .select("u", "v")
-    )
     sym = materialize(
-        edges.unionAll(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-    )
-    deg = sym.groupBy(F.col("u").alias("node")).agg(F.count("*").alias("d"))
-    n1 = sym.select(F.col("u").alias("x"), F.col("v").alias("a"))
-    n2 = sym.select(F.col("u").alias("x"), F.col("v").alias("b"))
-    cn = (
-        n1.join(n2, "x")
-        .filter(F.col("a") != F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("common"))
-    )
-    sim = (
-        cn.join(F.broadcast(deg.select(F.col("node").alias("a"), F.col("d").alias("da"))), "a")
-        .join(F.broadcast(deg.select(F.col("node").alias("b"), F.col("d").alias("db"))), "b")
-        .select(
-            "a",
-            "b",
-            F.floor(
-                F.col("common")
-                * F.lit(1000000.0)
-                / (F.col("da") + F.col("db") - F.col("common"))
-            )
-            .cast("bigint")
-            .alias("sim_micro"),
-        )
+        symmetric(brand_pairs(baskets).filter(F.col("w") >= 80).select("u", "v"))
     )
     owned = materialize(
-        c.orders.select("o_custkey", "o_orderkey")
-        .join(baskets, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select("o_custkey", "p_brand")
-        .distinct()
+        owned_brands(c.orders.select("o_custkey", "o_orderkey"), baskets)
     )
-    cand = owned.join(
-        F.broadcast(sim.select(F.col("a").alias("p_brand"), "b", "sim_micro")),
-        "p_brand",
-    )
-    not_owned = cand.join(
-        owned.select(
-            F.col("o_custkey").alias("ck2"), F.col("p_brand").alias("b2")
-        ),
-        (F.col("o_custkey") == F.col("ck2")) & (F.col("b") == F.col("b2")),
-        "left_anti",
-    )
-    scores = not_owned.groupBy("o_custkey", F.col("b").alias("rec_brand")).agg(
-        F.sum("sim_micro").cast("bigint").alias("score_micro")
-    )
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("score_micro").desc(), F.col("rec_brand")
-    )
-    top1 = (
-        scores.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("o_custkey", "rec_brand")
-    )
+    top1 = recommend_top1(owned, item_similarity(sym))
     m_users = owned.agg(
         F.countDistinct("o_custkey").cast("bigint").alias("n_users_with_history")
     )
@@ -1481,17 +1170,8 @@ def q_rec_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 @REGISTRY.register(
     "q_graph_reciprocity",
     tags=("graph",),
-    oracle="""
-WITH directed AS MATERIALIZED (
-  SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
-         CAST(COUNT(*) AS BIGINT) AS w
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer c ON o_custkey = c.c_custkey
-  JOIN supplier s ON l_suppkey = s.s_suppkey
-  WHERE c.c_nationkey <> s.s_nationkey
-  GROUP BY src, dst
-), paired AS MATERIALIZED (
+    oracle=f"""
+WITH {_DIRECTED}, paired AS MATERIALIZED (
   SELECT a.src, a.dst, a.w,
          COALESCE(b.w, 0) AS w_rev
   FROM directed a
@@ -1517,23 +1197,7 @@ def q_graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the directed edge table aggregates once from the fact
     join (broadcast dims); reciprocity is one self-join on the
     <=600-edge nation graph."""
-    c0 = catalog(spark, sf_dir)
-    cust = c0.customer.select("c_custkey", "c_nationkey")
-    supp = c0.supplier.select("s_suppkey", "s_nationkey")
-    directed = (
-        c0.lineitem.select("l_orderkey", "l_suppkey")
-        .join(
-            c0.orders.select("o_orderkey", "o_custkey"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(
-            F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
-        )
-        .agg(F.count("*").cast("bigint").alias("w"))
-    )
+    directed = nation_trade_edges(catalog(spark, sf_dir))
     rev = directed.select(
         F.col("dst").alias("rsrc"), F.col("src").alias("rdst"),
         F.col("w").alias("w_rev"),
@@ -1560,23 +1224,8 @@ def q_graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @REGISTRY.register(
     "q_harmonic_centrality",
     tags=("graph",),
-    oracle="""
-WITH RECURSIVE baskets AS MATERIALIZED (
-  SELECT DISTINCT l_orderkey, p_brand
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-), weighted AS MATERIALIZED (
-  SELECT a.p_brand AS u, b.p_brand AS v, CAST(COUNT(*) AS BIGINT) AS w
-  FROM baskets a JOIN baskets b
-    ON a.l_orderkey = b.l_orderkey AND a.p_brand < b.p_brand
-  GROUP BY a.p_brand, b.p_brand
-), top_edges AS MATERIALIZED (
-  SELECT u, v FROM (
-    SELECT u, v, ROW_NUMBER() OVER (ORDER BY w DESC, u, v) AS rn
-    FROM weighted
-  ) WHERE rn <= 40
-), sym AS MATERIALIZED (
-  SELECT u, v FROM top_edges UNION ALL SELECT v, u FROM top_edges
-), nodes AS MATERIALIZED (
+    oracle=f"""
+WITH RECURSIVE {_TOP40_SYM}, nodes AS MATERIALIZED (
   SELECT DISTINCT u AS node FROM sym
 ), walk AS (
   SELECT node AS origin, node, 0 AS d FROM nodes
@@ -1610,31 +1259,15 @@ def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     table grows; at real graph scale the same schedule shards by
     origin). Oracle = the identical walk as a depth-bounded recursive
     CTE."""
-    from catenae_kafka_spark.operators.composites import brand_baskets
-
-    c = catalog(spark, sf_dir)
-    baskets = brand_baskets(c)
-    a = baskets.select("l_orderkey", F.col("p_brand").alias("u"))
-    b = baskets.select("l_orderkey", F.col("p_brand").alias("v"))
     # brand-pair bounded; the frontier rounds re-reference sym and the
     # union/min-fold re-references dist — materialize the base once
-    # (optimization r13, guide §5: measured 60 lineitem scans / 240
-    # Exchanges in this query's plan without it)
-    weighted = materialize(
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("w"))
-    )
-    w_rank = Window.orderBy(F.col("w").desc(), "u", "v")
-    top_edges = (
-        weighted.withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= 40)
-        .select("u", "v")
-    )
-    sym = top_edges.unionByName(
-        top_edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).cache()
+    # (measured 60 lineitem scans / 240 Exchanges in this query's plan
+    # without it, optimization r13)
+    weighted = materialize(brand_pairs(brand_baskets(catalog(spark, sf_dir))))
+    # the seed set and all three rounds read sym: materialized, it beat
+    # recomputing the top-40 window per read (interleaved A/B at sf0.01,
+    # 9 reps: median 2.31 s vs 3.12 s)
+    sym = materialize(symmetric(top_edges(weighted, 40)))
     nodes = sym.select(F.col("u").alias("node")).distinct()
     dist = nodes.select(
         F.col("node").alias("origin"), "node", F.lit(0).alias("d")
@@ -1668,21 +1301,8 @@ def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
 @REGISTRY.register(
     "q_resource_allocation",
     tags=("graph", "link-prediction"),
-    oracle="""
-WITH baskets AS MATERIALIZED (
-  SELECT DISTINCT l_orderkey, p_brand
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-), edges AS MATERIALIZED (
-  SELECT a.p_brand AS u, b.p_brand AS v
-  FROM baskets a JOIN baskets b
-    ON a.l_orderkey = b.l_orderkey AND a.p_brand < b.p_brand
-  GROUP BY a.p_brand, b.p_brand
-  HAVING COUNT(*) >= 80
-), sym AS MATERIALIZED (
-  SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges
-), deg AS MATERIALIZED (
-  SELECT u AS node, CAST(COUNT(*) AS BIGINT) AS d FROM sym GROUP BY u
-)
+    oracle=f"""
+WITH {_EDGES80}, {_SYM}, {_DEG}
 SELECT n1.v AS a, n2.v AS b,
        CAST(COUNT(*) AS BIGINT) AS common,
        CAST(SUM(1000000 // g.d) AS BIGINT) AS ra_micro
@@ -1709,34 +1329,15 @@ def q_resource_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     penalty rides the same shuffle; the degree table is
     node-cardinality and broadcast. The hub-cap refinement bounds
     the quadratic term exactly as documented there."""
-    from catenae_kafka_spark.operators.composites import brand_baskets
-
-    c = catalog(spark, sf_dir)
-    baskets = brand_baskets(c)
-    a = baskets.select("l_orderkey", F.col("p_brand").alias("u"))
-    b = baskets.select("l_orderkey", F.col("p_brand").alias("v"))
-    edges = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= 80)
+    sym = materialize(symmetric(
+        brand_pairs(brand_baskets(catalog(spark, sf_dir)))
+        .filter(F.col("w") >= 80)
         .select("u", "v")
-    )
-    sym = materialize(
-        edges.unionAll(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-    )
-    deg = sym.groupBy(F.col("u").alias("node")).agg(
-        F.count("*").cast("bigint").alias("d")
-    )
-    n1 = sym.select(F.col("u").alias("x"), F.col("v").alias("a"))
-    n2 = sym.select(F.col("u").alias("x"), F.col("v").alias("b"))
+    ))
     return (
-        n1.join(n2, "x")
+        wedges(sym)
         .filter(F.col("a") < F.col("b"))
-        .join(F.broadcast(deg.withColumnRenamed("node", "x")), "x")
+        .join(F.broadcast(degrees(sym).withColumnRenamed("node", "x")), "x")
         .groupBy("a", "b")
         .agg(
             F.count("*").cast("bigint").alias("common"),
